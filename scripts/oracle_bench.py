@@ -56,9 +56,10 @@ def steal_jiffies():
 
 def steal_pct(j0, j1, elapsed):
     """Steal as % of total cpu capacity over the interval (USER_HZ=100)."""
-    if j0 is None or j1 is None or elapsed <= 0:
+    cpus = os.cpu_count()
+    if j0 is None or j1 is None or elapsed <= 0 or not cpus:
         return -1.0  # sentinel: unsampled, never a fake-clean 0.0
-    return (j1 - j0) / (elapsed * os.cpu_count() * 100.0) * 100.0
+    return (j1 - j0) / (elapsed * cpus * 100.0) * 100.0
 
 # min of N, same hygiene as graft.Bench; at sf100 a single run is the
 # honest trade (min-of-2 doubles a multi-hour recording for warmup noise
@@ -87,7 +88,8 @@ SKIP_SLOW = {n.strip()
 
 def connect():
     c = duckdb.connect()
-    c.execute(f"SET threads TO {os.cpu_count()}")
+    # cpu_count() is None when the host count is undeterminable
+    c.execute(f"SET threads TO {os.cpu_count() or 4}")
     # DuckDB's own default (80% of RAM = 100 GB here) — set explicitly
     # for reproducibility, NOT lower: an 80 GB trial run forced
     # graph_pagerank at sf1 to spill (96.8 s → 293 s), unfairly
@@ -204,8 +206,9 @@ for name in sorted(oracle):
         continue
     # the storm is BURSTY (r18: 0.4–11% minute to minute): a single dirty
     # window must not scrap a whole min-of-N recording — re-time THAT
-    # query after waiting for quiet, keep the clean attempt, and only
-    # refuse if no attempt comes back clean
+    # query after waiting for quiet, keep the clean attempt, and refuse
+    # at once if no attempt comes back clean (timing the remaining
+    # queries first would only delay a file that is never written)
     attempts = int(os.environ.get("ORACLE_BENCH_STEAL_ATTEMPTS", "4"))
     sec = err = sp = None
     for attempt in range(attempts):
@@ -214,6 +217,10 @@ for name in sorted(oracle):
         sp = steal_pct(j0, steal_jiffies(), time.perf_counter() - t0)
         if sp < 0 or sp <= MAX_STEAL:
             break
+        if attempt + 1 == attempts:
+            sys.exit(f"[oracle_bench] steal hit {sp:.1f}% during {name} "
+                     f"(bar {MAX_STEAL}%) on all {attempts} attempts — "
+                     "refusing to write")
         print(f"[oracle_bench] steal {sp:.1f}% during {name} "
               f"(attempt {attempt + 1}/{attempts}) — waiting for quiet "
               "and re-timing", file=sys.stderr)
@@ -232,11 +239,6 @@ for name in sorted(oracle):
         print(f"[oracle_bench] {name} FAILED: {err}", file=sys.stderr)
     else:
         times[name] = sec
-
-if steal_sampled and steal_max > MAX_STEAL:
-    sys.exit(f"[oracle_bench] steal hit {steal_max:.1f}% during {steal_worst} "
-             f"(bar {MAX_STEAL}%) even after per-query re-timing — "
-             "refusing to write")
 
 # A spike can also land MID-run (it did): check again before writing.
 # The check must be DECAY-AWARE: this script's own 32-thread run drives

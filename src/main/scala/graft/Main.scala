@@ -203,7 +203,10 @@ object Main {
           stringRows.write.format("sheet")
             .option("path", sheetDir).option("worksheet", "canonical")
             .mode("append").save()
-          println(s"updated_rows=${rows.count()}")
+          // the rows that landed, read back past the header on the driver:
+          // no second Spark job just to count them
+          val written = graft.sources.SheetBackend.readRows(sheetDir, "canonical").size - 1
+          println(s"updated_rows=$written")
         }
         spark.stop()
 

@@ -16,14 +16,18 @@ import org.apache.spark.sql.functions._
   *    vote-count order, and `max_deviation = max(|v - winner| / winner)`
   *    (0 if winner ≤ 0), rounded to 4 (`pipeline.py:176-191`);
   *  - `missing_sources` = sources that produced a payload but lack this
-  *    category (`pipeline.py:167-173`).
+  *    category (`pipeline.py:167-173`), each name once.
   *
-  * Spark-first design: vote counting is a partial-aggregable `groupBy`,
-  * winner selection is one window pass, and nothing leaves the executors —
-  * at 100 TB this is a shuffle on `(categoria, valor)` then `categoria`,
-  * both map-side combined. Python's dict-insertion-order tie-break becomes
-  * the explicit `priority` column (source registration order), because a
-  * distributed engine has no row order.
+  * Spark-first design: one shuffle on `categoria` gathers every vote of a
+  * category into a list bounded by the source count; the winner, the
+  * disagreement report and the deviation come from one higher-order-function
+  * projection over that list, sorted by (most votes, best priority, value).
+  * The set of reporting sources is a `Window.partitionBy()` over the
+  * per-category rows, so it is bounded by the category count, and the
+  * rows it leaves sit in one partition: a caller's `orderBy("categoria")`
+  * sorts locally, with no further exchange. Python's dict-insertion-order
+  * tie-break becomes the explicit `priority` column (source registration
+  * order), because a distributed engine has no row order.
   *
   * Expected payload schema:
   * `source_name STRING, priority INT, montos MAP<STRING,LONG>, ...`.
@@ -32,25 +36,6 @@ object Consensus {
 
   private def notTotal(c: Column): Column = !lower(c).startsWith("total")
 
-  /** Explode payload maps into one row per (source, categoria, valor) vote. */
-  def votes(payloads: DataFrame): DataFrame =
-    payloads
-      .filter(size(col("montos")) > 0)
-      .select(col("source_name"), col("priority"),
-        explode(col("montos")).as(Seq("categoria", "valor")))
-      .filter(notTotal(col("categoria")))
-
-  /** Per (categoria, valor): vote count, voters (registration order), best priority. */
-  def voteGroups(payloads: DataFrame): DataFrame =
-    votes(payloads)
-      .groupBy("categoria", "valor")
-      .agg(
-        count(lit(1)).as("n_votes"),
-        array_sort(collect_list(struct(col("priority"), col("source_name")))).as("voters_pr"),
-        min("priority").as("min_priority"))
-      .withColumn("voters", transform(col("voters_pr"), v => v.getField("source_name")))
-      .drop("voters_pr")
-
   /** One row per category: winner + disagreement + missing-source report.
     *
     * Output: categoria, valor (winner), winner_sources, n_candidates,
@@ -58,42 +43,57 @@ object Consensus {
     * max_deviation DOUBLE, missing_sources ARRAY<STRING>, has_mismatch BOOLEAN.
     */
   def merge(payloads: DataFrame): DataFrame = {
-    val allSources = payloads
-      .filter(size(col("montos")) > 0)
-      .select(array_sort(collect_list(struct(col("priority"), col("source_name")))).as("ps"))
-      .select(transform(col("ps"), v => v.getField("source_name")).as("all_sources"))
-
-    val order = Window.partitionBy("categoria")
-      .orderBy(col("n_votes").desc, col("min_priority").asc)
-    val full = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-
-    val enriched = voteGroups(payloads)
-      .withColumn("rn", row_number().over(order))
-      .withColumn("winner_valor", first("valor").over(full))
-      .withColumn("winner_sources", first("voters").over(full))
-
-    enriched
+    val perCategory = payloads
+      .select(col("source_name"), col("priority"),
+        explode(col("montos")).as(Seq("categoria", "valor")))
       .groupBy("categoria")
-      .agg(
-        first("winner_valor").as("valor"),
-        first("winner_sources").as("winner_sources"),
-        count(lit(1)).as("n_candidates"),
-        map_from_entries(transform(
-          array_sort(collect_list(when(col("rn") > 1,
-            struct(col("rn"),
-              col("valor").cast("string").as("k"), col("voters").as("v"))))),
-          e => struct(e.getField("k").as("key"), e.getField("v").as("value"))))
-          .as("disagreeing"),
+      .agg(collect_list(struct(col("valor"), col("priority"), col("source_name")))
+        .as("cands"))
+
+    // Every source with a non-empty payload, in registration order, taken
+    // before the total* filter: a source that reports only totals is
+    // missing from every category.
+    val reporters = collect_list(transform(col("cands"),
+        c => struct(c.getField("priority"), c.getField("source_name"))))
+      .over(Window.partitionBy())
+    val allSources = array_distinct(transform(array_sort(flatten(reporters)),
+      s => s.getField("source_name")))
+
+    // Per distinct value: (−votes, best priority, value, voters by
+    // priority); the natural struct order puts the winner first, then the
+    // losers in vote-count order.
+    def byValue(v: Column): Column = {
+      val voters = array_sort(filter(col("cands"), c => c.getField("valor") === v))
+      struct(
+        negate(size(voters)).as("neg_votes"),
+        voters.getItem(0).getField("priority").as("min_priority"),
+        v.as("valor"),
+        transform(voters, c => c.getField("source_name")).as("voters"))
+    }
+    val ranked = array_sort(transform(
+      array_distinct(transform(col("cands"), c => c.getField("valor"))), byValue(_)))
+    val winner = col("ranked").getItem(0)
+    val w = winner.getField("valor")
+
+    perCategory
+      .withColumn("all_sources", allSources)
+      .filter(notTotal(col("categoria")))
+      .withColumn("ranked", ranked)
+      .select(
+        col("categoria"),
+        w.as("valor"),
+        winner.getField("voters").as("winner_sources"),
+        size(col("ranked")).cast("long").as("n_candidates"),
+        map_from_entries(transform(filter(col("ranked"), (_, i) => i > 0),
+          e => struct(e.getField("valor").cast("string").as("key"),
+            e.getField("voters").as("value")))).as("disagreeing"),
         // divisor nulled when winner ≤ 0: ANSI mode would error on /0;
         // reference semantics (`pipeline.py:176-181`) = deviation 0.
-        coalesce(round(max(abs(col("valor") - col("winner_valor")) /
-            when(col("winner_valor") > 0, col("winner_valor").cast("double"))), 4),
+        coalesce(round(array_max(transform(col("ranked"),
+            e => abs(e.getField("valor") - w) / when(w > 0, w.cast("double")))), 4),
           lit(0.0)).as("max_deviation"),
-        array_distinct(flatten(collect_list(col("voters")))).as("responding"))
-      .crossJoin(broadcast(allSources))
-      .withColumn("missing_sources",
-        filter(col("all_sources"), s => !array_contains(col("responding"), s)))
-      .drop("responding", "all_sources")
+        filter(col("all_sources"), s => !exists(col("cands"),
+          c => c.getField("source_name") === s)).as("missing_sources"))
       .withColumn("has_mismatch", size(col("disagreeing")) > 0)
   }
 

@@ -4,15 +4,11 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Consensus winner as a typed `Aggregator` (SURVEY §2.10): the
-  * tie-break-by-priority argmax in ONE partial-aggregable pass.
-  *
-  * The window formulation in [[Consensus.merge]] needs a shuffle on
-  * (categoria, valor) then a sorted window over categoria; this UDAF needs
-  * a single shuffle on categoria with map-side combine — the cheaper plan
-  * when only the winner (not the disagreement report) is needed, e.g. the
-  * streaming hot path. Semantics identical: most votes wins, ties go to
-  * the lowest source priority (registration order), then lowest value for
-  * full determinism.
+  * tie-break-by-priority argmax in ONE partial-aggregable pass, for callers
+  * that hold votes as a typed `Dataset` and need only the winner, not the
+  * disagreement report — e.g. the streaming hot path. Semantics identical
+  * to [[Consensus.merge]]: most votes wins, ties go to the lowest source
+  * priority (registration order), then lowest value for full determinism.
   */
 object ConsensusAggregator {
 

@@ -9,9 +9,12 @@ import graft.Model._
   * Row conversion is set-at-a-time (explode/unpivot, `publish.py:69-116`);
   * the sheet itself is dimension-sized so the sink collects to the driver
   * and talks to a pluggable [[SheetsClient]] — the same split the
-  * reference's gspread client implies. Dry-run = diff mode: both
-  * directions of `exceptAll` plus a rendered unified-ish text diff
-  * (`publish.py:249-266`).
+  * reference's gspread client implies. Rows land in one worksheet anyway,
+  * so they are ordered by one single-partition sort (`coalesce(1)` +
+  * `sortWithinPartitions`) instead of a range-partitioned `orderBy`: one
+  * Spark job per collect or sheet write, with no sampling job or shuffle.
+  * Dry-run = diff mode: both directions of `exceptAll` plus a rendered
+  * unified-ish text diff (`publish.py:249-266`).
   */
 object Publish {
 
@@ -22,7 +25,7 @@ object Publish {
     records.toDF()
       .select(col("sorteo"), col("fecha"),
         explode(col("pozos_proximo")).as(Seq("categoria", "pozo_clp")))
-      .orderBy("categoria")
+      .coalesce(1).sortWithinPartitions("categoria")
 
   /** Premios-mode 8-col rows (`publish.py:80-92`). */
   def premioRows(records: Dataset[NormalizedRecord]): DataFrame =
@@ -38,7 +41,7 @@ object Publish {
         col("p.ganadores").as("ganadores"),
         col("pozos_proximo_json").as("pozos_proximo"),
         col("provenance_json").as("provenance"))
-      .orderBy("categoria")
+      .coalesce(1).sortWithinPartitions("categoria")
 
   /** Mode switch (`publish.py:69-79`): premios present → 8-col else 4-col. */
   def recordToRows(records: Dataset[NormalizedRecord]): DataFrame = {
@@ -57,7 +60,7 @@ object Publish {
         to_json(col("m.consensus")).as("consensus"),
         to_json(col("m.disagreeing")).as("disagreeing"),
         array_join(col("m.missing_sources"), ", ").as("missing_sources"))
-      .orderBy("categoria")
+      .coalesce(1).sortWithinPartitions("categoria")
 
   /** Header by row width (`publish.py:136-150`). */
   def headerFor(width: Int): Seq[String] =

@@ -1,8 +1,10 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.Model._
 import graft.sources.PozoSource
@@ -13,12 +15,17 @@ import graft.sources.PozoSource
   * Spark-first split: fetch is driver-orchestrated (2 stateful sources —
   * the reference is the same), everything set-shaped (consensus, scalars,
   * change detection) runs as DataFrame ops, and the single-record
-  * control-plane artifacts (normalized/state/report/summary JSONL) are
+  * control-plane artifacts (raw/normalized/state/report/summary JSONL) are
   * written atomically (temp+rename — the reference truncate-writes,
-  * `pipeline.py:437`) using Spark's own JSON encoders for byte-compatible
-  * lines. Side-effect ordering preserved from the reference: raw artifacts
-  * → read state → write normalized+state (unconditionally, *before* the
-  * decision) → report/summary → notify.
+  * `pipeline.py:437`) using Spark's own JSON encoder for byte-compatible
+  * lines: a `to_json` projection over a one-row local relation, which the
+  * optimizer folds at plan time (`ConvertToLocalRelation`), so writing an
+  * artifact runs no Spark job. The state file is read on the driver and
+  * parsed with `from_json` over a local relation, again without a job.
+  * A warm cycle's Spark jobs are the consensus merge's alone. Side-effect
+  * ordering preserved from the reference: raw artifacts → read state →
+  * write normalized+state (unconditionally, *before* the decision) →
+  * report/summary → notify.
   */
 object RunPipeline {
 
@@ -139,19 +146,15 @@ object RunPipeline {
           cfg.requestedSources.head
         else Option(new java.net.URI(p.fuente).getHost)
           .map(_.replace(".", "_")).getOrElse("source")
-      writeAtomic(rawDir.resolve(s"$fname.json"),
-        spark.createDataset(Seq(p)).toJSON.head() + "\n")
+      writeAtomic(rawDir.resolve(s"$fname.json"), jsonLine(spark, p))
     }
 
-    // 6. Previous state: PERMISSIVE JSONL scan tolerating corrupt lines
+    // 6. Previous state: PERMISSIVE JSONL parse tolerating corrupt lines
     //    (reference `pipeline.py:66-79`).
     val statePath = Paths.get(cfg.workDir, "state", "last_run.jsonl")
     val previous = loadState(spark, statePath.toString)
 
     // 7. Change detection (reference `pipeline.py:257-285`).
-    val currentDf = spark.createDataset(Seq(record)).toDF()
-      .select(col("sorteo"), col("fecha"),
-        col("provenance.pozos.primary.sha256").as("sha256"), col("pozos_proximo"))
     val unchanged = previous.exists { prev =>
       prev.sorteo == record.sorteo && prev.fecha == record.fecha && {
         val shaEq = (for {
@@ -164,7 +167,7 @@ object RunPipeline {
 
     // 8. Normalized + state written unconditionally, BEFORE the decision
     //    (reference `pipeline.py:436-437`).
-    val recordJson = spark.createDataset(Seq(record)).toJSON.head() + "\n"
+    val recordJson = jsonLine(spark, record)
     writeAtomic(Paths.get(cfg.workDir, "normalized.jsonl"), recordJson)
     writeAtomic(statePath, recordJson)
 
@@ -185,9 +188,9 @@ object RunPipeline {
 
     // 10. Report + summary sinks.
     writeAtomic(Paths.get(cfg.workDir, "comparison_report.json"),
-      spark.createDataset(Seq(report)).toJSON.head() + "\n")
+      jsonLine(spark, report))
     writeAtomic(Paths.get(cfg.workDir, "run_summary.json"),
-      spark.createDataset(Seq(summary)).toJSON.head() + "\n")
+      jsonLine(spark, summary))
 
     log.emit(Observability.Event("pipeline_end", cfg.now(), cfg.runId,
       Map("decision" -> status, "publish" -> publishFlag.toString,
@@ -197,19 +200,34 @@ object RunPipeline {
     Result(summary, report, record, collected)
   }
 
-  /** PERMISSIVE JSONL state scan; corrupt/blank lines skipped
-    * (reference `pipeline.py:66-79`). */
+  /** One record as a JSON line, byte-identical to `Dataset.toJSON`; the
+    * projection over a one-row local relation folds at plan time, so no
+    * Spark job runs. */
+  private[graft] def jsonLine[T: Encoder](spark: SparkSession, value: T): String =
+    spark.createDataset(Seq(value)).select(to_json(struct(col("*"))))
+      .head().getString(0) + "\n"
+
+  /** PERMISSIVE JSONL state read (reference `pipeline.py:66-79`): lines
+    * are read on the driver and parsed by `from_json` over a local
+    * relation, so no Spark job runs. Blank lines are skipped; so are
+    * corrupt lines and records that lack a required field (`provenance`
+    * down to its primary source, `pozos_proximo`, `confidence`) — one
+    * record per line, so a top-level JSON array line is corrupt too. */
   def loadState(spark: SparkSession, path: String): Seq[NormalizedRecord] = {
-    if (!Files.exists(Paths.get(path))) return Seq.empty
+    val file = Paths.get(path)
+    if (!Files.exists(file)) return Seq.empty
     import spark.implicits._
-    val schema = Encoders.product[NormalizedRecord].schema
-      .add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .filter(col("_corrupt_record").isNull)
-      .drop("_corrupt_record")
+    val corrupt = "_corrupt_record"
+    val schema = Encoders.product[NormalizedRecord].schema.add(corrupt, StringType)
+    val lines = new String(Files.readAllBytes(file), StandardCharsets.UTF_8)
+      .split("\r\n|\r|\n").filter(_.trim.nonEmpty).toSeq
+    lines.toDS()
+      .select(from_json(col("value"), schema,
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt)).as("r"))
+      .select("r.*")
+      .filter(col(corrupt).isNull && col("provenance.pozos.primary").isNotNull &&
+        col("pozos_proximo").isNotNull && col("confidence").isNotNull)
+      .drop(corrupt)
       .as[NormalizedRecord]
       .collect().toSeq
   }

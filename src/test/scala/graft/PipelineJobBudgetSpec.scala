@@ -1,0 +1,110 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.functions._
+import graft.Model._
+import graft.ops.{Publish, RunPipeline}
+import graft.sources.{PozoSource, SheetBackend}
+
+/** The EP1 cycle's Spark job budget, and the byte encoding of its
+  * single-record artifacts. At the paper's size (about nine categories ×
+  * two sources) a cycle's time is Spark's per-job fixed cost, so the job
+  * count is the figure to hold: the consensus merge runs the only jobs of
+  * `RunPipeline.run`, and a publish step runs one. */
+class PipelineJobBudgetSpec extends SparkSpec {
+
+  private val tagKey = "graft.test.budget"
+  private val jobsByTag = new ConcurrentHashMap[String, AtomicInteger]()
+  private val listener = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(t =>
+        jobsByTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet())
+  }
+
+  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(listener)
+  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(listener)
+
+  /** The body's result and the number of Spark jobs it started. */
+  private def jobs[T](tag: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(tagKey, tag)
+    val out = try body finally sc.setLocalProperty(tagKey, null)
+    TestListenerBus.drain(sc)
+    (out, Option(jobsByTag.get(tag)).map(_.get).getOrElse(0))
+  }
+
+  private def stub(n: String, prio: Int, montos: Map[String, Long],
+      sha: Option[String] = Some("sha"), ua: Option[String] = Some("TestBot/1.0"),
+      sorteo: Option[Long] = Some(5417L)): PozoSource = new PozoSource {
+    val name = n
+    val priority = prio
+    def fetch(): SourcePayload = SourcePayload(
+      n, prio, s"https://$n.cl/path", "2026-08-12T00:00:00Z",
+      sha, estimado = true, montos, ua, sorteo, Some("2026-04-26"))
+  }
+
+  private def cfg(dir: String, runId: String) = RunPipeline.Config(
+    workDir = dir, runId = runId, now = () => "2026-08-12T00:00:00Z")
+
+  private val sources = Seq(
+    stub("openloto", 0, Map("Loto Clásico" -> 690000000L, "Recargado" -> 180000000L,
+      "Jubilazo $1.000.000" -> 960000000L, "Revancha" -> 0L)),
+    stub("polla", 1, Map("Loto Clásico" -> 690000000L, "Recargado" -> 190000000L,
+      "Total estimado" -> 4300000000L)))
+
+  private def toJson[T: Encoder](v: T): String =
+    spark.createDataset(Seq(v)).toJSON.head() + "\n"
+
+  test("warm EP1 cycle runs at most 3 Spark jobs; a publish step at most 1") {
+    val dir = Files.createTempDirectory("graft-budget").toString
+    RunPipeline.run(spark, sources, cfg(dir, "budget-cold"))
+    // the warm cycle reads the state the cold one wrote
+    val (res, runJobs) = jobs("run")(RunPipeline.run(spark, sources, cfg(dir, "budget-warm")))
+    assert(res.summary.decision.status == "skip")
+    assert(runJobs <= 3, s"RunPipeline.run started $runJobs jobs")
+
+    import spark.implicits._
+    val sheetDir = Paths.get(dir, "sheets").toString
+    val (_, writeJobs) = jobs("write") {
+      val rows = Publish.recordToRows(spark.createDataset(Seq(res.record)))
+      rows.select(rows.columns.toSeq.map(c => coalesce(col(c).cast("string"), lit("")).as(c)): _*)
+        .write.format("sheet").option("path", sheetDir)
+        .option("worksheet", "canonical").mode("append").save()
+    }
+    assert(writeJobs <= 1, s"sheet write started $writeJobs jobs")
+    val (diff, diffJobs) = jobs("dry-run")(Publish.dryRunDiff(
+      SheetBackend.readRows(sheetDir, "canonical"),
+      Publish.recordToRows(spark.createDataset(Seq(res.record)))))
+    assert(diffJobs <= 1, s"dry-run diff started $diffJobs jobs")
+    assert(diff == "(No changes detected against the current sheet)")
+  }
+
+  test("every artifact is byte-identical to the Dataset.toJSON encoding") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-bytes").toString
+    val withNones = Seq(
+      stub("a", 0, Map("Loto Clásico" -> 1000L, "say \"hi\"" -> 5L, "Ñandú" -> 7L),
+        sha = None, ua = None, sorteo = None),
+      stub("b", 1, Map("Loto Clásico" -> 1200L)),
+      stub("c", 2, Map.empty))
+    val r = RunPipeline.run(spark, withNones, cfg(dir, "bytes"))
+    def read(f: String) = Files.readString(Paths.get(dir, f))
+    for (p <- r.collected)
+      assert(read(s"raw/${p.source_name}_cl.json") == toJson(p), p.source_name)
+    assert(read("normalized.jsonl") == toJson(r.record))
+    assert(read("state/last_run.jsonl") == toJson(r.record))
+    assert(read("comparison_report.json") == toJson(r.report))
+    assert(read("run_summary.json") == toJson(r.summary))
+    // the report carries a None max_deviation (a missing-only mismatch)
+    assert(r.report.mismatches.exists(_.max_deviation.isEmpty))
+
+    val withPremios = r.record.copy(fuente = None, pozos_proximo = Map.empty,
+      premios = Seq(Premio("6 aciertos", 900L, 0L), Premio("Tómbola", 1L, 3L)))
+    assert(RunPipeline.jsonLine(spark, withPremios) == toJson(withPremios))
+  }
+}

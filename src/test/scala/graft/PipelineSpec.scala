@@ -114,6 +114,26 @@ class PipelineSpec extends SparkSpec {
     assert(r.summary.decision.status == "publish") // corrupt state ≠ match
   }
 
+  test("partial state records are skipped as corrupt, not an NPE") {
+    val dir = tmpDir()
+    val sources = Seq(stub("a", 0, Map("Loto" -> 1L)))
+    RunPipeline.run(spark, sources, cfg(dir))
+    val statePath = Paths.get(dir, "state", "last_run.jsonl")
+    val good = Files.readString(statePath)
+    // a parseable record without provenance, and top-level JSON array
+    // lines (one record per line: never expanded into their elements)
+    val partial = """{"sorteo":5417,"fecha":"2026-04-26","pozos_proximo":{}}"""
+    val array = s"[$partial]\n[${good.trim}]"
+    Files.writeString(statePath, s"$partial\n$array\n")
+    assert(RunPipeline.loadState(spark, statePath.toString).isEmpty)
+    val r = RunPipeline.run(spark, sources, cfg(dir))
+    assert(r.summary.decision.status == "publish") // no usable state ≠ match
+    // a good line beside them is still read
+    Files.writeString(statePath, s"$partial\n$array\n\n$good")
+    assert(RunPipeline.loadState(spark, statePath.toString).map(_.pozos_proximo) ==
+      Seq(Map("Loto" -> 1L)))
+  }
+
   test("normalized artifact round-trips through the typed JSONL scan") {
     val dir = tmpDir()
     RunPipeline.run(spark, Seq(
