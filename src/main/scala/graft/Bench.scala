@@ -406,21 +406,26 @@ object Bench {
   }
 
   /** Per-query DuckDB seconds recorded by scripts/oracle_bench.py, if a
-    * times file for this SF is committed. Flat hand-rolled parse — the
-    * file is machine-written `"name": 1.23` pairs; no JSON lib needed. */
+    * times file for this SF is committed. */
   private def oracleTimes(sfDir: String): Option[Map[String, Double]] = {
     val sfName = new java.io.File(sfDir).getName
     val f = new java.io.File(s"scripts/oracle_times_$sfName.json")
     if (!f.isFile) return None
-    val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    val entry = """"([A-Za-z0-9_]+)":\s*([0-9]+\.?[0-9]*)""".r
-    // the _meta block carries no query-shaped keys except numeric fields
-    // (recorded_unix, load_avg, threads); exclude them by name
-    val meta = Set("recorded_unix", "load_avg", "threads")
-    val m = entry.findAllMatchIn(text)
-      .map(x => x.group(1) -> x.group(2).toDouble)
-      .filterNot { case (k, _) => meta.contains(k) }
-      .toMap
+    val m = parseOracleTimes(
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
     if (m.isEmpty) None else Some(m)
+  }
+
+  /** The `"name": seconds` pairs of a times file's `"times"` object — the
+    * `_meta` block's numeric fields (`runs`, `threads`, `max_pct`, …) are
+    * not query times. Hand-rolled: the file is machine-written by
+    * `json.dump`, and `times` holds flat numbers only, so it ends at its
+    * first `}`. */
+  private[graft] def parseOracleTimes(text: String): Map[String, Double] = {
+    val times = """"times"\s*:\s*\{([^}]*)\}""".r
+    val entry = """"([^"]+)"\s*:\s*(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)""".r
+    times.findFirstMatchIn(text).toSeq.flatMap { t =>
+      entry.findAllMatchIn(t.group(1)).map(x => x.group(1) -> x.group(2).toDouble)
+    }.toMap
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver test tables (TESTDATA.md).
   *
@@ -13,8 +15,62 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A plain parquet relation over `dir/name.parquet`, with Spark's own
+    * inferred schema remembered for the JVM.
+    *
+    * `spark.read.parquet` infers the schema from the footers with a
+    * one-task Spark job on every call, and every declared query's `fn`
+    * loads its tables afresh, so building a query ran one job per table
+    * read. The first read of a table still infers exactly as Spark does;
+    * later reads pass that schema to `spark.read.schema(...)` and start no
+    * job. Each call still builds a fresh relation (fresh attribute ids, a
+    * fresh file listing), so self-joins resolve and appended files are
+    * seen; memoizing the DataFrame instead would share attribute ids
+    * between two loads of one table, which the self-join check rejects.
+    *
+    * A schema is reused only while the table's file identity — qualified
+    * path, modification time and length from one `getFileStatus` — and
+    * the session confs that change parquet inference ([[InferenceConfs]])
+    * are all unchanged. Spark's writers replace or add part files, which
+    * moves the table directory's modification time; a file system that
+    * reports no time (0) is never memoized. A missing path falls through
+    * to `spark.read.parquet`, so its error is Spark's own. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.getModificationTime > 0) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = (st.getPath.toString, InferenceConfs.map(spark.conf.getOption))
+        val hit = schemaMemo.get(key)
+        if (hit != null && hit.modTime == st.getModificationTime && hit.length == st.getLen)
+          spark.read.schema(hit.schema).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          schemaMemo.put(key, Inferred(st.getModificationTime, st.getLen, df.schema))
+          df
+        }
+    }
+  }
+
+  /** Session confs under which parquet schema inference can return a
+    * different schema for the same files. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private final case class Inferred(modTime: Long, length: Long, schema: StructType)
+  /** One entry per (qualified path, inference confs): a rewritten table
+    * replaces its entry instead of adding one. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Option[String]]), Inferred]()
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -71,50 +127,33 @@ object Tables {
     * exact for COUNT(*) always; for MIN/MAX use numeric/date columns only —
     * writers may truncate string statistics, and Spark's footer fast-path
     * rejects such columns at runtime rather than silently using them. */
-  def footerScan(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val cache = footerState.synchronized {
-      var c = footerState.get(spark)
-      if (c == null) { c = new FooterCache(mkFooterSession(spark)); footerState.put(spark, c) }
-      c
+  def footerScan(spark: SparkSession, dir: String, name: String): DataFrame =
+    load(footerSession(spark), dir, name)
+
+  /** The footer-configured child of each parent session, built once. A
+    * child reads through the same schema memo as every [[load]], so a
+    * footer frame starts no inference job after its table's first read.
+    * The parent key is WEAK and a child does not reference its parent, so
+    * a dropped session's child is collectable rather than pinned for the
+    * JVM lifetime. `newSession()` builds its SQLConf from the shared
+    * SparkContext conf only, so runtime-set session confs do NOT carry
+    * over — copy the ones the footer path's correctness depends on. */
+  private def footerSession(parent: SparkSession): SparkSession =
+    footerSessions.synchronized {
+      var s = footerSessions.get(parent)
+      if (s == null) {
+        s = parent.newSession()
+        // timeZone: timestamp rendering; nanosAsLong: events TIMESTAMP(NANOS)
+        Seq("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+          .foreach(k => parent.conf.getOption(k).foreach(s.conf.set(k, _)))
+        s.conf.set("spark.sql.sources.useV1SourceList", "")
+        s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+        footerSessions.put(parent, s)
+      }
+      s
     }
-    cache.frames.computeIfAbsent((dir, name), _ => load(cache.session, dir, name))
-  }
-
-  /** Footer-scan frames memoized per (parent session, dir, table): a
-    * DataFrame is an immutable plan, safe to reuse across actions, and
-    * re-building one pays driver-side parquet schema inference every
-    * time — ~40 ms × 10 tables made the q24 metadata sweep cost like a
-    * data query. The memo holds plans, not data. The parent-session key
-    * is WEAK (and the cached values reference only the child session),
-    * so a stopped/dropped session's entries are collectable rather than
-    * pinned for the JVM lifetime.
-    *
-    * Staleness contract: the memoized plan captures the parquet FILE
-    * INDEX as of first use — a table directory rewritten mid-session is
-    * served stale by this path (exactly like Spark's own catalog cache).
-    * The driver's tables are written once per round, before any query
-    * runs; a caller that rewrites a dir mid-session must use a fresh
-    * session (or plain [[load]], which re-infers per call). */
-  private final class FooterCache(val session: SparkSession) {
-    val frames =
-      new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  }
-  private val footerState =
-    new java.util.WeakHashMap[SparkSession, FooterCache]()
-
-  /** One footer-configured child per parent session. `newSession()` builds
-    * its SQLConf from the shared SparkContext conf only, so runtime-set
-    * session confs do NOT carry over — copy the ones the footer path's
-    * correctness depends on explicitly. */
-  private def mkFooterSession(parent: SparkSession): SparkSession = {
-    val s = parent.newSession()
-    // timeZone: timestamp rendering; nanosAsLong: events TIMESTAMP(NANOS)
-    Seq("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
-      .foreach(k => parent.conf.getOption(k).foreach(s.conf.set(k, _)))
-    s.conf.set("spark.sql.sources.useV1SourceList", "")
-    s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    s
-  }
+  private val footerSessions =
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
 
   /** Exact row count of table `name` read DRIVER-SIDE from parquet footer
     * metadata — no Spark job at all (the [[footerScan]] path still launches
@@ -126,7 +165,8 @@ object Tables {
     * read independent of table size — the same footers every scan's split
     * planning already touches. Memoized per (dir, name) for the JVM: the
     * value is one Long keyed by two Strings, and the driver's tables are
-    * written once per round (same staleness contract as [[footerScan]]). */
+    * written once per round, before any query runs; a caller that
+    * rewrites a table mid-session keeps its first count. */
   def footerRowCount(spark: SparkSession, dir: String, name: String): Long =
     rowCountMemo.computeIfAbsent((dir, name), { _ =>
       val conf = spark.sparkContext.hadoopConfiguration
