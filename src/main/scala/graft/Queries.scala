@@ -881,8 +881,9 @@ object Queries {
         // The aggregate is on the driver already, and a prefix sum over
         // <= 25 longs is driver arithmetic — the same two-phase pattern
         // as Ids.stableIds (distributed partials, driver cumsum): one
-        // job, one customer scan, no second join. R15Probe q51 A/B
-        // (sf0.1, min-of-5 interleaved): agg-alone 0.265 s / r13
+        // job, one customer scan, no second join. The r15 q51 A/B
+        // (SCALE.md "Round 15 — the r14 sf0.1 regression"; sf0.1,
+        // min-of-5 interleaved): agg-alone 0.265 s / r13
         // theta-self-join 0.250 s / r14 collect+join 0.389 s / this
         // cumsum 0.360 s; at sf10: agg-alone 0.660 / r13 0.225 / r14
         // 0.760 / cumsum 0.697. The r13 single-plan shape reading FASTER
@@ -2185,12 +2186,12 @@ object Queries {
     // so the shuffle-order float noise (~1e-15) never crosses engines or
     // partitionings. The oracle unrolls the same 5 iterations as chained
     // CTEs built by pageRankOracleSql — identical arithmetic per step.
-    // Edge-build shape (r13, tools/R13Probe pagerank, three min-of-N
-    // sessions at sf10): SHUFFLE_HASH on the fact-fact orderkey join
-    // (the q19 lesson — the SMJ sorts were ~20% of the query) and
-    // distinct on the LONG key pair BEFORE the string node ids are
-    // built, so the dedup exchange ships 16-byte rows instead of
-    // ~20-byte strings and hashes/compares longs: declared-shape min
+    // Edge-build shape (r13, SCALE.md "Round 13 — pagerank edge build",
+    // three min-of-N sessions at sf10): SHUFFLE_HASH on the fact-fact
+    // orderkey join (the q19 lesson — the SMJ sorts were ~20% of the query)
+    // and distinct on the LONG key pair BEFORE the string node ids are
+    // built, so the dedup exchange ships 16-byte rows instead of ~20-byte
+    // strings and hashes/compares longs: declared-shape min
     // 49.4–57.9 s across sessions → this shape 34.8–36.2 s. Dropping
     // the query-side distinct entirely measured another ~3 s better at
     // sf10 (pageRank's und build window-dedupes anyway) but would
@@ -3034,8 +3035,8 @@ object Queries {
     // Strategy + two-stage SparkPlan, plans/GroupedTopK.scala): per-key
     // heaps bound each map partition to k rows per key BEFORE the
     // shuffle — O(keys·k·partitions) crosses the wire, not O(rows).
-    // Same answer as the window form (the oracle), better plan. The
-    // composition form (ops.TopK.perKey) is pinned by TopKSpec. ----
+    // Same answer as the window form (the oracle), better plan;
+    // GroupedTopKSpec pins it against that form, hot key included. ----
     QDef("q41_topk_perkey",
       (s, d) => {
         // one exchange, not two: see q09 — the pk clustering serves both

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `struct<n_words, sum_word_chars, n_symbols, n_lines, n_bullet_lines,
   * n_ellipsis_lines, n_alpha_words, n_stopwords>` (all longs).
   *
-  * The declarative form ([[graft.ops.TextAnalysis.gopherRulesDeclarative]])
+  * The declarative form (kept as the reference twin in `GopherStatsSpec`)
   * paid interpreted lambda passes per WORD (`rlike("[a-z]")`, a
   * `+ length` fold) and per LINE (two anchored rlikes) plus three
   * full-text `regexp_replace`s and an `array_intersect` — ~10 passes,

@@ -10,10 +10,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Marker-token language ID as ONE native codegen byte walk.
   *
-  * The declarative form ([[graft.ops.TextAnalysis.langIdDeclarative]]
-  * + argmax) tokenizes the document once PER LANGUAGE — `filter(toks, t
-  * -> t.isin(...))` lambda bodies never CSE with each other (the
-  * documented HOF no-CSE trap), so the sf0.1 plan carried FIVE
+  * The declarative form (marker scores + argmax, kept as the reference
+  * twin in `LangIdSpec`) tokenizes the document once PER LANGUAGE —
+  * `filter(toks, t -> t.isin(...))` lambda bodies never CSE with each
+  * other (the documented HOF no-CSE trap), so the sf0.1 plan carried FIVE
   * `ws_split(trim(lower(text)))` trees per row, each feeding an
   * INTERPRETED ArrayFilter whose `isin` re-compares every token against
   * every marker — measured 170 µs/doc at sf0.1 (0.85 s for a 5 k-doc

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen pass over the vector:
   * `struct<scale double, codes string, mse double, cos_recon double>`.
   *
-  * The declarative form ([[graft.ops.Similarity.quantizeInt8Declarative]])
+  * The declarative form (kept as the reference twin in `QuantizeSpec`)
   * paid SIX interpreted array-HOF passes per row (`transform` ×3,
   * `zip_with`-fold ×2, fold ×2 — every lambda eval boxing a double); on
   * a 256-dim corpus that was ~0.6 s of pure interpretation at sf0.1 for

@@ -798,8 +798,9 @@ object Dedup {
     * (sf1: 50 k sizes ≈ 1 MB) to sort-merge (sf10: 500 k ≈ 12 MB >
     * the 10 MB threshold) — a full 226 M-row sort appearing exactly
     * between sf1 and sf10 was the "14× wall for 10× data".
-    * Three candidate redesigns MEASURED AND REJECTED (probe harness in
-    * tools/ContainmentProbe): exact hot-shingle broadcast-anti prune
+    * Three candidate redesigns MEASURED AND REJECTED (r11, SCALE.md
+    * "Round 11 — pair-stage anatomy"): exact hot-shingle broadcast-anti
+    * prune
     * (39.1 s vs 37.3 s — the window prune was never the cost);
     * SHUFFLE_HASH pair-join hints (60.6 s — hash build beats nothing
     * when the SMJ sort rides the existing exchange); and the

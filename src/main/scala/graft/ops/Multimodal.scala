@@ -99,7 +99,8 @@ object Multimodal {
     * asynchronous and implementation-dependent — so identical bytes give
     * identical thumbnails on every JVM, partition, and cluster size.
     * Luminance is integer BT.601 ((299·R + 587·G + 114·B) / 1000). */
-  /** Memory-backed ImageIO streams (measured, r11 — `tools/ImageProbe`):
+  /** Memory-backed ImageIO streams (measured, r11 — SCALE.md "Same
+    * disease, image half"):
     * `ImageIO.read(InputStream)` / `write(…, OutputStream)` route
     * through `createImageInput/OutputStream`, which with the default
     * `useCache = true` backs every call with a `FileCacheImage*Stream`
@@ -293,20 +294,20 @@ object Multimodal {
     * (JDK 17 `JDK13Services`), which (a) costs ~28 of the ~31 µs per
     * decode and (b) serializes every executor task thread through one
     * global lock — decode throughput measured NEGATIVE-scaling on 32
-    * threads (27 k op/s at 1 thread → 17 k aggregate at 32;
-    * `tools/AudioProbe`). Resolving the providers ONCE per JVM via the
-    * public `ServiceLoader` API and reusing the instances — exactly the
-    * singletons AudioSystem itself would hand every thread — removes
-    * both. The lazy vals live per executor JVM; provider instances are
-    * stateless parsers designed for concurrent use (AudioSystem shares
-    * them globally). Falls back to AudioSystem if the service loader
-    * sees no providers (exotic classloader layouts). */
+    * threads (27 k op/s at 1 thread → 17 k aggregate at 32; SCALE.md
+    * "Round 11 — the audio queries' hidden global lock"). Resolving the
+    * providers ONCE per JVM via the public `ServiceLoader` API and reusing
+    * the instances — exactly the singletons AudioSystem itself would hand
+    * every thread — removes both. The lazy vals live per executor JVM;
+    * provider instances are stateless parsers designed for concurrent use
+    * (AudioSystem shares them globally). Falls back to AudioSystem if the
+    * service loader sees no providers (exotic classloader layouts). */
   private[graft] object AudioSpi {
     import javax.sound.sampled.{AudioInputStream, AudioSystem}
     import javax.sound.sampled.spi.{AudioFileReader, AudioFileWriter}
     import scala.jdk.CollectionConverters._
     /** Sampled-container readers only, WAVE first. Two measured reasons
-      * (jstack'd, `tools/AudioProbe`): (1) the JDK registers
+      * (jstack'd, r11 — same SCALE.md chapter): (1) the JDK registers
       * `SoftMidiAudioFileReader` — a MIDI-to-PCM SYNTH — as an audio
       * reader, and its probe calls `MidiSystem.getSequence`, which
       * re-runs the synchronized `JDK13Services` MIDI provider lookup

@@ -46,12 +46,4 @@ object Notifiers {
       head :+ ("section" -> ("*Discrepancies Detail:*\n" + lines.mkString("\n")))
     }
   }
-
-  /** Webhook sink abstraction; [[RecordingWebhook]] for tests. */
-  trait Webhook { def post(payload: String): Unit }
-
-  final class RecordingWebhook extends Webhook {
-    val posts = scala.collection.mutable.ListBuffer[String]()
-    def post(payload: String): Unit = posts += payload
-  }
 }

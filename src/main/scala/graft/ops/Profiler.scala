@@ -151,7 +151,8 @@ object Profiler {
       // small-corpus path (see [[SmallStackedGate]]): ONE job — scan,
       // project the double casts, collect, and sort each column on the
       // driver; ranks interpolate through the SAME [[assemble]] code as
-      // the two-phase path. Probed at sf0.1 (R18Probe): the two-phase
+      // the two-phase path. Probed at sf0.1 (r18, OPTIMIZATION_r18.md
+      // "What changed", item 3): the two-phase
       // CDF and a counts-collect variant both floor at ~1.8 s (the
       // (column, v) counts aggregation itself is the wall on 2.4 M
       // stacked values) and a percentile()-aggregate at ~2.3 s; raw

@@ -21,15 +21,11 @@ object Similarity {
 
   /** Sequential-fold dot product — same accumulation order every engine
     * uses for a plain loop, so results are bit-stable. Codegen'd native
-    * expression ([[graft.functions.VecDot]]); [[dotHof]] is the
-    * higher-order-function form it replaced (kept for the equivalence
-    * spec — the HOF is interpreted per row and breaks whole-stage
-    * codegen on the pair-scoring hot path). */
+    * expression ([[graft.functions.VecDot]]); the higher-order-function
+    * form it replaced is interpreted per row and breaks whole-stage
+    * codegen on the pair-scoring hot path. The test-tree `VectorOracle` keeps
+    * that form for the equivalence specs. */
   def dot(a: Column, b: Column): Column = graft.functions.VectorExprs.dot(a, b)
-
-  /** HOF formulation of [[dot]]; bit-identical, ~interpreted. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -476,45 +472,14 @@ object Similarity {
   def quantizeInt8(embeddings: DataFrame, vecCol: String = "embedding")
       : DataFrame = {
     // r18: the whole per-vector computation is ONE native pass
-    // (QuantizeInt8Expr) — the declarative chain below paid six
-    // interpreted array-HOF passes per row, every lambda eval boxing a
-    // double. QuantizeSpec pins the two bit-identical.
+    // (QuantizeInt8Expr) — the declarative chain paid six interpreted
+    // array-HOF passes per row, every lambda eval boxing a double.
+    // QuantizeSpec keeps that chain and pins the two bit-identical.
     embeddings.select(col("vec_id"),
         graft.functions.QuantizeInt8Expr.quantizeInt8(
           asDouble(col(vecCol))).as("__q"))
       .select(col("vec_id"), col("__q.scale").as("scale"),
         col("__q.codes").as("codes"), col("__q.mse").as("mse"),
         col("__q.cos_recon").as("cos_recon"))
-  }
-
-  /** The declarative HOF chain [[quantizeInt8]] replaced — kept as the
-    * equivalence-spec reference (the `piiFeaturesRegex` precedent). */
-  def quantizeInt8Declarative(embeddings: DataFrame,
-      vecCol: String = "embedding"): DataFrame = {
-    val x = embeddings.select(col("vec_id"), asDouble(col(vecCol)).as("e"))
-    val s = x.withColumn("scale",
-      greatest(array_max(transform(col("e"), v => abs(v))), lit(1e-12)) / 127)
-    val q = s.withColumn("q", transform(col("e"),
-      v => greatest(least(round(v / col("scale")), lit(127.0)), lit(-127.0))
-        .cast("int")))
-    val r = q.withColumn("recon",
-      transform(col("q"), c => c * col("scale")))
-    val m = r.select(col("vec_id"), col("scale"), col("q"),
-      aggregate(zip_with(col("e"), col("recon"),
-        (a, b) => (a - b) * (a - b)), lit(0.0), _ + _).as("__se"),
-      size(col("e")).cast("double").as("__d"),
-      aggregate(zip_with(col("e"), col("recon"), _ * _), lit(0.0), _ + _)
-        .as("__dot"),
-      aggregate(transform(col("e"), v => v * v), lit(0.0), _ + _).as("__ne2"),
-      aggregate(transform(col("recon"), v => v * v), lit(0.0), _ + _)
-        .as("__nr2"))
-    m.select(col("vec_id"), round(col("scale"), 6).as("scale"),
-      array_join(col("q"), " ").as("codes"),
-      round(col("__se") / col("__d"), 10).as("mse"),
-      // all-zero vector ⇒ zero reconstruction: cosine undefined → null
-      // (an ANSI-mode division, not NaN — keep the guard explicit)
-      when(col("__ne2") > 0 && col("__nr2") > 0,
-        round(col("__dot") / (sqrt(col("__ne2")) * sqrt(col("__nr2"))), 6))
-        .as("cos_recon"))
   }
 }

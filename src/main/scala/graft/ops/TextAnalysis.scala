@@ -16,21 +16,13 @@ object TextAnalysis {
   /** Whitespace token count. */
   def tokenCount(c: Column): Column = size(toks(c))
 
-  /** BPE-ish subword count: word-pieces + digits + punctuation runs. */
-  def subwordCount(c: Column): Column =
-    size(filter(split(c, "(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"), t => t =!= ""))
-
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
+  private[graft] val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
 
   /** ONE native byte walk (TokenSetCountExpr) since r18 — the filter +
     * isin form re-compared every token interpreted; TokenSetCountSpec
-    * pins the two identical. */
+    * keeps that form and pins the two identical. */
   def stopwordCount(c: Column): Column =
     graft.functions.TokenSetCountExpr.tokenSetCount(lower(c), stopwords)
-
-  /** The declarative form [[stopwordCount]] replaced — spec reference. */
-  def stopwordCountDeclarative(c: Column): Column =
-    size(filter(toks(lower(c)), t => t.isin(stopwords.map(lit): _*)))
 
   def punctCount(c: Column): Column =
     length(c) - length(regexp_replace(c, "[.,;:!?]", ""))
@@ -58,35 +50,15 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "das", "und", "ist", "mit"),
     "pt" -> Seq("o", "a", "de", "e", "os", "das"))
 
-  def langScores(c: Column): Column = {
-    val tks = toks(lower(c))
-    map_from_arrays(
-      array(langMarkers.map(m => lit(m._1)): _*),
-      array(langMarkers.map { case (_, ms) =>
-        size(filter(tks, t => t.isin(ms.map(lit): _*)))
-      }: _*))
-  }
-
   /** Predicted language = argmax marker hits, ties → alphabetical first.
     * ONE native byte walk ([[graft.functions.LangIdExpr]]) since r18: the
-    * declarative form below tokenized the doc once per language (HOF
-    * lambda bodies never CSE) through interpreted ArrayFilters — 170 µs/
-    * doc at sf0.1. LangIdSpec pins the two bit-identical. */
+    * declarative marker-score form tokenized the doc once per language
+    * (HOF lambda bodies never CSE) through interpreted ArrayFilters —
+    * 170 µs/doc at sf0.1. `LangIdSpec` keeps that form and pins
+    * the two bit-identical. */
   def langId(documents: DataFrame, textCol: String = "text"): DataFrame =
     documents.withColumn("pred_lang",
       graft.functions.LangIdExpr.pick(col(textCol), langMarkers))
-
-  /** The declarative argmax form [[langId]] replaced — kept as the
-    * equivalence-spec reference (the `piiFeaturesRegex` precedent). */
-  def langIdDeclarative(documents: DataFrame, textCol: String = "text"): DataFrame = {
-    val scored = documents.withColumn("scores", langScores(col(textCol)))
-    scored.withColumn("pred_lang",
-      expr("array_sort(map_entries(scores), " +
-        "(l, r) -> CASE WHEN l.value > r.value THEN -1 " +
-        "WHEN l.value < r.value THEN 1 " +
-        "WHEN l.key < r.key THEN -1 WHEN l.key > r.key THEN 1 ELSE 0 END)[0].key"))
-      .drop("scores")
-  }
 
   /** End-to-end curation: the canonical training-data filter chain, one
     * auditable row per input doc. drop_reason (first failing rule wins):
@@ -161,8 +133,8 @@ object TextAnalysis {
     * ([[graft.functions.PiiScanExpr]] — three byte walks, no regex
     * machinery) instead of four `java.util.regex` passes per row
     * (measured 15.3× the oracle at sf10 — r17 VERDICT item 3).
-    * [[piiFeaturesRegex]] keeps the declarative regexp form; PiiScanSpec
-    * pins the two bit-identical. */
+    * `PiiScanSpec` keeps the declarative regexp form and pins
+    * the two bit-identical. */
   def piiFeatures(documents: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
     documents
@@ -172,18 +144,6 @@ object TextAnalysis {
       .withColumn("has_pii", col("n_emails") > 0 || col("n_phones") > 0)
       .withColumn("redacted", col("__pii.redacted"))
       .drop("__pii")
-  }
-
-  /** The regexp_* formulation [[piiFeatures]] replaced — kept as the
-    * equivalence-spec reference (the `dotHof` precedent). */
-  def piiFeaturesRegex(documents: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    documents
-      .withColumn("n_emails", regexp_count(t, lit(emailRe)))
-      .withColumn("n_phones", regexp_count(t, lit(phoneRe)))
-      .withColumn("has_pii", col("n_emails") > 0 || col("n_phones") > 0)
-      .withColumn("redacted",
-        regexp_replace(regexp_replace(t, emailRe, "[EMAIL]"), phoneRe, "[PHONE]"))
   }
 
   /** 64-bit content fingerprint (xxhash64 of the canonicalized token stream). */
@@ -643,9 +603,10 @@ object TextAnalysis {
     * re-derive grade-level variants without another scan. */
   def readability(documents: DataFrame, textCol: String = "text"): DataFrame = {
     // r18: the three counts are ONE native byte walk (TextStatsExpr) —
-    // the declarative form below paid an interpreted per-WORD
-    // regexp_count lambda for syllables plus a full-text regex for
-    // sentences (~150 µs/doc at sf0.1). TextStatsSpec pins equivalence.
+    // the declarative form paid an interpreted per-WORD regexp_count
+    // lambda for syllables plus a full-text regex for sentences
+    // (~150 µs/doc at sf0.1). TextStatsSpec keeps that form and pins
+    // equivalence.
     val counted = documents
       .withColumn("__st", graft.functions.TextStatsExpr.textStats(col(textCol)))
       .select(col("doc_id"), col("__st.n_words").as("n_words"),
@@ -690,21 +651,6 @@ object TextAnalysis {
       when(exactOk, exact).otherwise(fallback).as("flesch"))
   }
 
-  /** The declarative count form [[readability]] replaced — kept as the
-    * equivalence-spec reference (the `piiFeaturesRegex` precedent). */
-  def readabilityCountsDeclarative(documents: DataFrame,
-      textCol: String = "text"): DataFrame = {
-    val toksed = documents.select(col("doc_id"),
-      toks(lower(col(textCol))).as("__w"), col(textCol).as("__text"))
-    toksed.select(col("doc_id"),
-      size(col("__w")).cast("long").as("n_words"),
-      greatest(regexp_count(col("__text"), lit("[.!?]+")), lit(1))
-        .cast("long").as("n_sentences"),
-      aggregate(transform(col("__w"),
-          w => greatest(regexp_count(w, lit("[aeiouy]+")), lit(1))),
-        lit(0L), _ + _).as("n_syllables"))
-  }
-
   /** The Gopher required-stopword set (Rae et al. 2021 §A1.1.2): a doc
     * must contain ≥ 2 of these to look like running English prose. */
   val gopherStopwords: Seq[String] =
@@ -728,9 +674,9 @@ object TextAnalysis {
       maxEllipsisRatio: Double = 0.3, minAlphaRatio: Double = 0.8,
       minStopwords: Int = 2, textCol: String = "text"): DataFrame = {
     // r18: every raw count is ONE native GopherStatsExpr walk — the
-    // declarative form below ([[gopherRulesDeclarative]]) paid ~10
-    // passes, several through interpreted per-token/per-line rlike
-    // lambdas (~120 µs/doc at sf0.1). GopherStatsSpec pins equivalence.
+    // declarative form paid ~10 passes, several through interpreted
+    // per-token/per-line rlike lambdas (~120 µs/doc at sf0.1).
+    // GopherStatsSpec keeps that form and pins equivalence.
     val st = documents.withColumn("__g",
       graft.functions.GopherStatsExpr.gopherStats(col(textCol), gopherStopwords))
     val n = col("__g.n_words")
@@ -750,47 +696,8 @@ object TextAnalysis {
       minStopwords)
   }
 
-  /** The declarative measurement form [[gopherRules]] replaced — kept as
-    * the equivalence-spec reference (the `piiFeaturesRegex` precedent). */
-  def gopherRulesDeclarative(documents: DataFrame, minWords: Int = 50,
-      maxWords: Int = 100000, minMeanLen: Double = 3, maxMeanLen: Double = 10,
-      maxSymbolRatio: Double = 0.1, maxBulletRatio: Double = 0.9,
-      maxEllipsisRatio: Double = 0.3, minAlphaRatio: Double = 0.8,
-      minStopwords: Int = 2, textCol: String = "text"): DataFrame = {
-    val toksed = documents.select(col("doc_id"),
-      toks(lower(col(textCol))).as("__w"),
-      split(col(textCol), "\n").as("__lines"),
-      col(textCol).as("__text"))
-    val n = size(col("__w")).cast("long")
-    val nLines = greatest(size(col("__lines")), lit(1)).cast("double")
-    val hashes = length(col("__text")) -
-      length(regexp_replace(col("__text"), "#", ""))
-    val ellipses =
-      (length(col("__text")) -
-        length(regexp_replace(col("__text"), "\\.\\.\\.", ""))) / 3 +
-      (length(col("__text")) - length(regexp_replace(col("__text"), "…", "")))
-    val measured = toksed.select(
-      col("doc_id"),
-      n.as("n_words"),
-      round(aggregate(col("__w"), lit(0L), (a, x) => a + length(x)) /
-        greatest(n, lit(1)).cast("double"), 4).as("mean_word_len"),
-      round((hashes + ellipses) / greatest(n, lit(1)).cast("double"), 4)
-        .as("symbol_ratio"),
-      round(size(filter(col("__lines"), l => l.rlike("^[-*•]"))) / nLines, 4)
-        .as("bullet_ratio"),
-      round(size(filter(col("__lines"), l => l.rlike("(\\.\\.\\.|…)$"))) / nLines, 4)
-        .as("ellipsis_ratio"),
-      round(size(filter(col("__w"), w => w.rlike("[a-z]"))) /
-        greatest(n, lit(1)).cast("double"), 4).as("alpha_ratio"),
-      size(array_intersect(array_distinct(col("__w")),
-        array(gopherStopwords.map(lit): _*))).cast("long").as("n_stopwords"))
-    gopherVerdicts(measured, minWords, maxWords, minMeanLen, maxMeanLen,
-      maxSymbolRatio, maxBulletRatio, maxEllipsisRatio, minAlphaRatio,
-      minStopwords)
-  }
-
   /** Shared rule-verdict columns over the measured features. */
-  private def gopherVerdicts(measured: DataFrame, minWords: Int,
+  private[graft] def gopherVerdicts(measured: DataFrame, minWords: Int,
       maxWords: Int, minMeanLen: Double, maxMeanLen: Double,
       maxSymbolRatio: Double, maxBulletRatio: Double,
       maxEllipsisRatio: Double, minAlphaRatio: Double,

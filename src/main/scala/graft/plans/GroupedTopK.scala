@@ -11,9 +11,11 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 /** Grouped top-k as a first-class operator: custom logical node, planner
   * strategy, and a two-stage physical implementation.
   *
-  * This is the whole-operator form of [[graft.ops.TopK.perKey]]
-  * (preference ladder: compose built-ins → custom Expression → custom
-  * LogicalPlan + Strategy + SparkPlan). The physical pipeline is
+  * It replaced the composed form (a `mapPartitions` heap prune under a
+  * `row_number` window) from the top rung of the preference ladder:
+  * compose built-ins → custom Expression → custom LogicalPlan + Strategy
+  * + SparkPlan. `GroupedTopKSpec` pins it against the window form. The
+  * physical pipeline is
   *
   *   [[PartialTopKExec]]  — bounded per-key heaps inside every input
   *     partition, over raw InternalRows (no encoder round-trip); emits
@@ -25,9 +27,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *     Emits the first k rows of each key run.
   *
   * What crosses the exchange is O(keys·k·partitions), not O(rows) — the
-  * same pruning argument as TopK.perKey, but with operator-level control:
-  * no Row encoders, no window machinery, and a plan that reads as what
-  * it is (`ExactTopK ← Sort ← Exchange ← PartialTopK`).
+  * same pruning argument as the composed form, but with operator-level
+  * control: no Row encoders, no window machinery, and a plan that reads
+  * as what it is (`ExactTopK ← Sort ← Exchange ← PartialTopK`).
   */
 case class GroupedTopKNode(keys: Seq[Attribute], ordering: Seq[SortOrder], k: Int,
     child: LogicalPlan) extends UnaryNode {

@@ -1,6 +1,7 @@
 package graft.tools
 
-/** Guarded /proc/stat sampler shared by [[graft.Bench]] and [[IsoProbe]]
+/** Guarded /proc/stat sampler shared by [[graft.Bench]] and the
+  * perfbench harness (`perfbench/src/perfbench/PerfBench.scala`)
   * (r17, ADVICE items 2/3): steal (field 8) and iowait (field 5)
   * cumulative jiffies (USER_HZ=100) summed over all cpus. Returns None
   * when the file is unreadable or malformed — a caller must SKIP steal

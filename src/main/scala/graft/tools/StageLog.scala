@@ -7,8 +7,7 @@ import org.apache.spark.sql.SparkSession
   * queries and prints one JSON line per completed Spark stage — wall
   * (submission→completion), executor run/GC seconds, shuffle read/write,
   * memory/disk spill, task count, and the stage's name (call site). Where
-  * [[IsoProbe]] totals a query and [[ContainmentStages]] times
-  * hand-built plan prefixes, this needs NO per-operator harness: the
+  * Bench totals a query, this needs NO per-operator harness: the
   * stage stream itself says which exchange/sort/agg owns the wall and
   * the spill — the question the graph_pagerank 285 GB/run and the
   * q20/q32/tfidf 16–17×/decade walls pose.

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.ops.TextAnalysis
 
 /** Pins [[graft.functions.GopherStatsExpr]] — the two-walk native Gopher
   * counter — bit-identical to the declarative rlike/fold formulation
-  * ([[TextAnalysis.gopherRulesDeclarative]], the oracle semantics
-  * verbatim). The generator drives the walk's edges: bullet chars
+  * (`gopherRulesDeclarative` below, the oracle semantics verbatim). The
+  * generator drives the walk's edges: bullet chars
   * ('-', '*', multi-byte '•') at line starts, "..." runs at overlap
   * boundaries ("....." is ONE non-overlapping match), '…' adjacency,
   * lines ending in '\r' (Java `$` steps over one final terminator),
@@ -17,6 +19,43 @@ class GopherStatsSpec extends SparkSpec {
   private def check(p: Prop, min: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), p)
     assert(res.passed, res.status.toString)
+  }
+
+  /** The declarative measurement form [[TextAnalysis.gopherRules]]
+    * replaced, at its default thresholds; the verdict columns are the
+    * shared [[TextAnalysis.gopherVerdicts]]. */
+  private def gopherRulesDeclarative(documents: DataFrame): DataFrame = {
+    val toksed = documents.select(col("doc_id"),
+      TextAnalysis.toks(lower(col("text"))).as("__w"),
+      split(col("text"), "\n").as("__lines"),
+      col("text").as("__text"))
+    val n = size(col("__w")).cast("long")
+    val nLines = greatest(size(col("__lines")), lit(1)).cast("double")
+    val hashes = length(col("__text")) -
+      length(regexp_replace(col("__text"), "#", ""))
+    val ellipses =
+      (length(col("__text")) -
+        length(regexp_replace(col("__text"), "\\.\\.\\.", ""))) / 3 +
+      (length(col("__text")) - length(regexp_replace(col("__text"), "…", "")))
+    val measured = toksed.select(
+      col("doc_id"),
+      n.as("n_words"),
+      round(aggregate(col("__w"), lit(0L), (a, x) => a + length(x)) /
+        greatest(n, lit(1)).cast("double"), 4).as("mean_word_len"),
+      round((hashes + ellipses) / greatest(n, lit(1)).cast("double"), 4)
+        .as("symbol_ratio"),
+      round(size(filter(col("__lines"), l => l.rlike("^[-*•]"))) / nLines, 4)
+        .as("bullet_ratio"),
+      round(size(filter(col("__lines"), l => l.rlike("(\\.\\.\\.|…)$"))) / nLines, 4)
+        .as("ellipsis_ratio"),
+      round(size(filter(col("__w"), w => w.rlike("[a-z]"))) /
+        greatest(n, lit(1)).cast("double"), 4).as("alpha_ratio"),
+      size(array_intersect(array_distinct(col("__w")),
+        array(TextAnalysis.gopherStopwords.map(lit): _*))).cast("long").as("n_stopwords"))
+    TextAnalysis.gopherVerdicts(measured, minWords = 50, maxWords = 100000,
+      minMeanLen = 3, maxMeanLen = 10, maxSymbolRatio = 0.1,
+      maxBulletRatio = 0.9, maxEllipsisRatio = 0.3, minAlphaRatio = 0.8,
+      minStopwords = 2)
   }
 
   private val frags: Gen[String] = Gen.oneOf(
@@ -42,7 +81,7 @@ class GopherStatsSpec extends SparkSpec {
     check(Prop.forAll(Gen.listOfN(40, texts)) { docs: List[String] =>
       val df = docs.zipWithIndex.toDF("text", "doc_id")
       val native = TextAnalysis.gopherRules(df).select(outCols.head, outCols.tail: _*)
-      val decl = TextAnalysis.gopherRulesDeclarative(df)
+      val decl = gopherRulesDeclarative(df)
         .select(outCols.head, outCols.tail: _*)
       val diff = native.exceptAll(decl).unionAll(decl.exceptAll(native))
       val bad = diff.collect()

@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.ops.TextAnalysis
 
 /** Pins [[graft.functions.LangIdExpr]] — the one-walk native language
   * picker — bit-identical to the declarative marker-score argmax it
-  * replaced ([[TextAnalysis.langIdDeclarative]], the oracle semantics
-  * verbatim). The generator mixes marker tokens from every language
+  * replaced (`langIdDeclarative` below, the oracle semantics verbatim).
+  * The generator mixes marker tokens from every language
   * (several markers are SHARED across languages — "de", "la", "a" — so
   * the bitmask fan-out and the alphabetical tiebreak both get exercised),
   * case variants the `lower()` child must fold, multi-byte UTF-8,
@@ -19,6 +20,26 @@ class LangIdSpec extends SparkSpec {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), p)
     assert(res.passed, res.status.toString)
   }
+
+  /** Marker-token hits per language, as a language → count map. */
+  private def langScores(c: Column): Column = {
+    val tks = TextAnalysis.toks(lower(c))
+    map_from_arrays(
+      array(TextAnalysis.langMarkers.map(m => lit(m._1)): _*),
+      array(TextAnalysis.langMarkers.map { case (_, ms) =>
+        size(filter(tks, t => t.isin(ms.map(lit): _*)))
+      }: _*))
+  }
+
+  /** The declarative argmax form [[TextAnalysis.langId]] replaced. */
+  private def langIdDeclarative(documents: DataFrame): DataFrame =
+    documents.withColumn("scores", langScores(col("text")))
+      .withColumn("pred_lang",
+        expr("array_sort(map_entries(scores), " +
+          "(l, r) -> CASE WHEN l.value > r.value THEN -1 " +
+          "WHEN l.value < r.value THEN 1 " +
+          "WHEN l.key < r.key THEN -1 WHEN l.key > r.key THEN 1 ELSE 0 END)[0].key"))
+      .drop("scores")
 
   private val allMarkers: Seq[String] =
     TextAnalysis.langMarkers.flatMap(_._2).distinct
@@ -45,7 +66,7 @@ class LangIdSpec extends SparkSpec {
     check(Prop.forAll(Gen.listOfN(60, texts)) { docs: List[String] =>
       val df = docs.zipWithIndex.toDF("text", "doc_id")
       val native = TextAnalysis.langId(df).select("doc_id", "pred_lang")
-      val decl = TextAnalysis.langIdDeclarative(df).select("doc_id", "pred_lang")
+      val decl = langIdDeclarative(df).select("doc_id", "pred_lang")
       val diff = native.exceptAll(decl).unionAll(decl.exceptAll(native))
       val bad = diff.collect()
       if (bad.nonEmpty)

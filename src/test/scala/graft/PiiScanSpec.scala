@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.ops.TextAnalysis
 
 /** Pins [[graft.functions.PiiScanExpr]] — the single-pass native PII
   * scanner — bit-identical to the `regexp_count`/`regexp_replace`
-  * formulation it replaced ([[TextAnalysis.piiFeaturesRegex]], which is
-  * the declared/oracle semantics verbatim). The generator is built to
+  * formulation it replaced (`piiFeaturesRegex` below, which is the
+  * declared/oracle semantics verbatim). The generator is built to
   * hit the scanner's hand-compiled backtracking edges: domain runs with
   * multiple dots and short TLDs, local-class characters ('_', '%', '+')
   * that extend past a failed domain, '@' chains, digit runs at the
@@ -18,6 +19,18 @@ class PiiScanSpec extends SparkSpec {
   private def check(p: Prop, min: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), p)
     assert(res.passed, res.status.toString)
+  }
+
+  /** The regexp_* formulation [[TextAnalysis.piiFeatures]] replaced. */
+  private def piiFeaturesRegex(documents: DataFrame): DataFrame = {
+    val t = col("text")
+    documents
+      .withColumn("n_emails", regexp_count(t, lit(TextAnalysis.emailRe)))
+      .withColumn("n_phones", regexp_count(t, lit(TextAnalysis.phoneRe)))
+      .withColumn("has_pii", col("n_emails") > 0 || col("n_phones") > 0)
+      .withColumn("redacted", regexp_replace(
+        regexp_replace(t, TextAnalysis.emailRe, "[EMAIL]"),
+        TextAnalysis.phoneRe, "[PHONE]"))
   }
 
   private val fragments: Gen[String] = Gen.oneOf(
@@ -44,7 +57,7 @@ class PiiScanSpec extends SparkSpec {
       val df = docs.zipWithIndex.toDF("text", "doc_id")
       val native = TextAnalysis.piiFeatures(df)
         .select("doc_id", "n_emails", "n_phones", "has_pii", "redacted")
-      val regex = TextAnalysis.piiFeaturesRegex(df)
+      val regex = piiFeaturesRegex(df)
         .select("doc_id", "n_emails", "n_phones", "has_pii", "redacted")
       val diff = native.exceptAll(regex).unionAll(regex.exceptAll(native))
       val bad = diff.collect()
@@ -81,7 +94,7 @@ class PiiScanSpec extends SparkSpec {
       // each, starting at the underscore-extended local part
       ("x_a@b.com_y@z.org", 2, 0, "[EMAIL][EMAIL]"))
     val df = cases.map(_._1).zipWithIndex.toDF("text", "doc_id")
-    for (fn <- Seq(TextAnalysis.piiFeatures(df), TextAnalysis.piiFeaturesRegex(df))) {
+    for (fn <- Seq(TextAnalysis.piiFeatures(df), piiFeaturesRegex(df))) {
       val got = fn.orderBy("doc_id")
         .select("n_emails", "n_phones", "redacted").collect()
       cases.zipWithIndex.foreach { case ((txt, ne, np, red), i) =>

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.ops.Similarity
 
 /** Pins [[graft.functions.QuantizeInt8Expr]] — the one-pass native int8
   * quantizer — bit-identical to the declarative HOF chain it replaced
-  * ([[Similarity.quantizeInt8Declarative]], the oracle semantics
-  * verbatim). The generator hits the numeric edges: all-zero vectors
+  * (`quantizeInt8Declarative` below, the oracle semantics verbatim). The
+  * generator hits the numeric edges: all-zero vectors
   * (cos_recon NULL via the norm guard), sub-1e-12 magnitudes (the scale
   * floor), round-half boundaries (.5 quantization ties), ±values at the
   * ±127 clamp, mixed magnitudes, and the empty vector (scale floor,
@@ -16,6 +18,36 @@ class QuantizeSpec extends SparkSpec {
   private def check(p: Prop, min: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), p)
     assert(res.passed, res.status.toString)
+  }
+
+  /** The declarative HOF chain [[Similarity.quantizeInt8]] replaced. */
+  private def quantizeInt8Declarative(embeddings: DataFrame): DataFrame = {
+    val x = embeddings.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("e"))
+    val s = x.withColumn("scale",
+      greatest(array_max(transform(col("e"), v => abs(v))), lit(1e-12)) / 127)
+    val q = s.withColumn("q", transform(col("e"),
+      v => greatest(least(round(v / col("scale")), lit(127.0)), lit(-127.0))
+        .cast("int")))
+    val r = q.withColumn("recon",
+      transform(col("q"), c => c * col("scale")))
+    val m = r.select(col("vec_id"), col("scale"), col("q"),
+      aggregate(zip_with(col("e"), col("recon"),
+        (a, b) => (a - b) * (a - b)), lit(0.0), _ + _).as("__se"),
+      size(col("e")).cast("double").as("__d"),
+      aggregate(zip_with(col("e"), col("recon"), _ * _), lit(0.0), _ + _)
+        .as("__dot"),
+      aggregate(transform(col("e"), v => v * v), lit(0.0), _ + _).as("__ne2"),
+      aggregate(transform(col("recon"), v => v * v), lit(0.0), _ + _)
+        .as("__nr2"))
+    m.select(col("vec_id"), round(col("scale"), 6).as("scale"),
+      array_join(col("q"), " ").as("codes"),
+      round(col("__se") / col("__d"), 10).as("mse"),
+      // all-zero vector ⇒ zero reconstruction: cosine undefined → null
+      // (an ANSI-mode division, not NaN — keep the guard explicit)
+      when(col("__ne2") > 0 && col("__nr2") > 0,
+        round(col("__dot") / (sqrt(col("__ne2")) * sqrt(col("__nr2"))), 6))
+        .as("cos_recon"))
   }
 
   private val element: Gen[Double] = Gen.oneOf(
@@ -38,7 +70,7 @@ class QuantizeSpec extends SparkSpec {
         .map { case (v, i) => (i.toLong, v.map(_.toFloat)) }
         .toDF("vec_id", "embedding")
       val native = Similarity.quantizeInt8(df)
-      val decl = Similarity.quantizeInt8Declarative(df)
+      val decl = quantizeInt8Declarative(df)
       val diff = native.exceptAll(decl).unionAll(decl.exceptAll(native))
       val bad = diff.collect()
       if (bad.nonEmpty)

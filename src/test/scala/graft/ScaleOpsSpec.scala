@@ -2,27 +2,17 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.ops.{Consensus, ConsensusAggregator, TextAnalysis}
+import graft.ops.{Consensus, TextAnalysis}
 import graft.sources.{DistributedFetch, FixtureTransport}
 
-/** New scale operators: UDAF consensus, distributed fetch, TF-IDF. */
+/** Scale operators: consensus winners, distributed fetch, TF-IDF. */
 class ScaleOpsSpec extends SparkSpec {
 
   test("Aggregator consensus winner matches the window formulation") {
-    import spark.implicits._
-    import ConsensusAggregator.Vote
-    val votes = Seq(
-      Vote("Loto", 1000L, "a", 0), Vote("Loto", 1000L, "b", 1),
-      Vote("Loto", 1200L, "c", 2),
-      Vote("Recargado", 500L, "a", 0), Vote("Recargado", 700L, "b", 1), // tie
-      Vote("Revancha", 9L, "c", 2)).toDS()
-    val udaf = votes.groupByKey(_.categoria)
-      .agg(ConsensusAggregator.winner.toColumn.name("w"))
-      .collect().map { case (cat, w) => cat -> w.valor }.toMap
-    assert(udaf == Map("Loto" -> 1000L, "Recargado" -> 500L, "Revancha" -> 9L))
-
-    // equivalence with the window formulation (the test-tree oracle) and
-    // with the one-shuffle merge on the same data
+    // Loto: 2-1 majority; Recargado: a 1-1 tie the lower source priority
+    // breaks; Revancha: one vote. The one-shuffle merge and the window
+    // formulation (the test-tree oracle) must both pick these winners.
+    val expected = Map("Loto" -> 1000L, "Recargado" -> 500L, "Revancha" -> 9L)
     val payloads = spark.createDataFrame(
       java.util.Arrays.asList(
         Row("a", 0, "fa", "s1", true, Map("Loto" -> 1000L, "Recargado" -> 500L), 1L, "f"),
@@ -31,8 +21,8 @@ class ScaleOpsSpec extends SparkSpec {
       SourceStubs.schema)
     def winners(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[String]("categoria") -> r.getAs[Long]("valor")).toMap
-    assert(winners(ConsensusOracle.merge(payloads)) == udaf)
-    assert(winners(Consensus.merge(payloads)) == udaf)
+    assert(winners(ConsensusOracle.merge(payloads)) == expected)
+    assert(winners(Consensus.merge(payloads)) == expected)
   }
 
   test("distributed fetch: per-host groups, failures as data") {

@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.ops.TextAnalysis
 
 /** Pins [[graft.functions.TextStatsExpr]] — the one-walk readability
   * counter — bit-identical to the declarative ws_split + regexp_count
-  * formulation it replaced ([[TextAnalysis.readabilityCountsDeclarative]],
-  * the oracle semantics verbatim). The generator targets the walk's
+  * formulation it replaced (`readabilityCountsDeclarative` below, the
+  * oracle semantics verbatim). The generator targets the walk's
   * boundary logic: tab/newline edges that survive Spark's space-only
   * trim (boundary empty tokens), vowel runs split across 'y', zero-vowel
   * tokens (syllable floor), [.!?]+ runs adjacent to spaces and to each
@@ -18,6 +19,19 @@ class TextStatsSpec extends SparkSpec {
   private def check(p: Prop, min: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), p)
     assert(res.passed, res.status.toString)
+  }
+
+  /** The declarative count form [[TextAnalysis.readability]] replaced. */
+  private def readabilityCountsDeclarative(documents: DataFrame): DataFrame = {
+    val toksed = documents.select(col("doc_id"),
+      TextAnalysis.toks(lower(col("text"))).as("__w"), col("text").as("__text"))
+    toksed.select(col("doc_id"),
+      size(col("__w")).cast("long").as("n_words"),
+      greatest(regexp_count(col("__text"), lit("[.!?]+")), lit(1))
+        .cast("long").as("n_sentences"),
+      aggregate(transform(col("__w"),
+          w => greatest(regexp_count(w, lit("[aeiouy]+")), lit(1))),
+        lit(0L), _ + _).as("n_syllables"))
   }
 
   private val words: Gen[String] = Gen.oneOf(
@@ -41,7 +55,7 @@ class TextStatsSpec extends SparkSpec {
       val df = docs.zipWithIndex.toDF("text", "doc_id")
       val native = TextAnalysis.readability(df)
         .select("doc_id", "n_words", "n_sentences", "n_syllables")
-      val decl = TextAnalysis.readabilityCountsDeclarative(df)
+      val decl = readabilityCountsDeclarative(df)
         .select("doc_id", "n_words", "n_sentences", "n_syllables")
       val diff = native.exceptAll(decl).unionAll(decl.exceptAll(native))
       val bad = diff.collect()

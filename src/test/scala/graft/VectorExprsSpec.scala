@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs
-import graft.ops.{Dedup, Similarity}
+import graft.ops.Dedup
 
 /** Native vector expressions and single-pass sketch aggregators:
   * bit-identical to the formulations they replaced, and still correct at
@@ -30,7 +30,7 @@ class VectorExprsSpec extends SparkSpec {
       Seq(1.5) -> Seq(-2.5))
     val got = df.select(
       VectorExprs.dot(col("a"), col("b")).as("nd"),
-      Similarity.dotHof(col("a"), col("b")).as("hd"),
+      VectorOracle.dotHof(col("a"), col("b")).as("hd"),
       VectorExprs.sqDist(col("a"), col("b")).as("ns"),
       aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, v) => acc + v).as("hs")).collect()
@@ -49,7 +49,7 @@ class VectorExprsSpec extends SparkSpec {
       (null: Seq[Double]) -> Seq(1.0))
     val got = df.select(
       VectorExprs.dot(col("a"), col("b")).as("nd"),
-      Similarity.dotHof(col("a"), col("b")).as("hd")).collect()
+      VectorOracle.dotHof(col("a"), col("b")).as("hd")).collect()
     got.foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
   }
 

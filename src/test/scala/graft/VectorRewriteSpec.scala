@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Similarity
 import graft.plans.{GraftExtensions, RewriteVectorFolds}
 
 /** Optimizer rewrite: HOF vector folds become native expressions. */
@@ -18,7 +17,7 @@ class VectorRewriteSpec extends SparkSpec {
 
   test("aggregate(zip_with(*, +)) rewrites to vec_dot, results identical") {
     withRule {
-      val df = emb.select(col("vec_id"), Similarity.dotHof(col("a"), col("a")).as("d"))
+      val df = emb.select(col("vec_id"), VectorOracle.dotHof(col("a"), col("a")).as("d"))
       val opt = df.queryExecution.optimizedPlan.toString
       assert(opt.contains("vec_dot") && !opt.contains("aggregate("), opt.take(800))
       val native = emb.select(col("vec_id"),
