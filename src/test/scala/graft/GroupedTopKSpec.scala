@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.plans.GroupedTopK
@@ -25,24 +24,13 @@ class GroupedTopKSpec extends SparkSpec {
   }
 
   test("plan: ExactTopK above the exchange, PartialTopK below it") {
-    import spark.implicits._
-    def assertShape(df: DataFrame, key: String): Unit = {
-      val p = df.queryExecution.executedPlan.toString
-      val exact = p.indexOf("ExactTopK")
-      val exchange = p.indexOf(s"Exchange hashpartitioning($key")
-      val partial = p.indexOf("PartialTopK")
-      assert(exact >= 0 && exchange > exact && partial > exchange, p.take(2000))
-    }
     val df = GroupedTopK.perKey(votes, "l_partkey", Seq("cnt" -> false), k = 1)
     df.collect() // materialize through AQE
-    assertShape(df, "l_partkey")
-
-    // one hot key, 10k rows over 4 partitions: the window form would
-    // shuffle and sort all 10k; the partial heaps ship ≤ k per partition
-    val hot = (1 to 10000).map(i => (1L, i.toLong)).toDF("k", "v").repartition(4)
-    val out = GroupedTopK.perKey(hot, "k", Seq("v" -> true), k = 5)
-    assert(out.collect().map(_.getLong(1)).sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
-    assertShape(out, "k")
+    val p = df.queryExecution.executedPlan.toString
+    val exact = p.indexOf("ExactTopK")
+    val exchange = p.indexOf("Exchange hashpartitioning(l_partkey")
+    val partial = p.indexOf("PartialTopK")
+    assert(exact >= 0 && exchange > exact && partial > exchange, p.take(2000))
   }
 
   test("composite key: top-1 per (returnflag, linestatus) equals window") {

@@ -1,50 +1,25 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.ops.TopK
+import graft.plans.GroupedTopK
 
-/** Partial-prune grouped top-k: equals the window form exactly, prunes
-  * before the shuffle, invariant to partitioning. */
+/** Grouped top-k on one hot key: the exact answer, and the per-key
+  * final step (ExactTopK, the window's place) reads the pruned frame. */
 class TopKSpec extends SparkSpec {
-
-  private def votes = Tables.lineitem(spark, sf("sf0.001"))
-    .groupBy("l_partkey", "l_suppkey").agg(count(lit(1)).as("cnt"))
-
-  test("perKey equals the window formulation (desc order with tiebreak)") {
-    val byWindow = votes.withColumn("rn", row_number().over(
-        Window.partitionBy("l_partkey")
-          .orderBy(col("cnt").desc, col("l_suppkey").asc)))
-      .filter(col("rn") <= 2).drop("rn")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val byTopK = TopK.perKey(votes, "l_partkey",
-        Seq("cnt" -> false, "l_suppkey" -> true), k = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(byTopK == byWindow)
-  }
-
-  test("perKey is partition-count invariant") {
-    val a = TopK.perKey(votes.repartition(1), "l_partkey",
-        Seq("cnt" -> false, "l_suppkey" -> true), k = 3)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    val b = TopK.perKey(votes.repartition(17), "l_partkey",
-        Seq("cnt" -> false, "l_suppkey" -> true), k = 3)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(a == b)
-  }
 
   test("hot key: exact answer, and the window input is the pruned frame") {
     import spark.implicits._
     // one hot key with 10k rows across 4 partitions — the window form
     // would sort all 10k; perKey's shuffle input is ≤ k·partitions rows
     val hot = (1 to 10000).map(i => (1L, i.toLong)).toDF("k", "v").repartition(4)
-    val out = TopK.perKey(hot, "k", Seq("v" -> true), k = 5)
+    val out = GroupedTopK.perKey(hot, "k", Seq("v" -> true), k = 5)
     assert(out.collect().map(_.getLong(1)).sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
-    // plan shape: the exchange feeding the window sits above the
-    // map-partitions prune, not above the raw scan
+    // plan shape: the exchange feeding ExactTopK sits above the
+    // PartialTopK prune, not above the raw scan
     val plan = out.queryExecution.executedPlan.toString
+    val exactIdx = plan.indexOf("ExactTopK")
     val exchangeIdx = plan.indexOf("Exchange hashpartitioning(k")
-    val mapIdx = plan.indexOf("MapPartitions")
-    assert(exchangeIdx >= 0 && mapIdx > exchangeIdx, plan.take(2000))
+    val partialIdx = plan.indexOf("PartialTopK")
+    assert(exactIdx >= 0 && exchangeIdx > exactIdx && partialIdx > exchangeIdx,
+      plan.take(2000))
   }
 }
