@@ -43,10 +43,10 @@ object Publish {
         col("provenance_json").as("provenance"))
       .coalesce(1).sortWithinPartitions("categoria")
 
-  /** Mode switch (`publish.py:69-79`): premios present → 8-col else 4-col. */
+  /** Mode switch (`publish.py:69-79`): premios present → 8-col else 4-col;
+    * the first record decides, an empty dataset gives 4-col rows. */
   def recordToRows(records: Dataset[NormalizedRecord]): DataFrame = {
-    val hasPremios = !records.isEmpty &&
-      records.toDF().select(size(col("premios"))).head().getInt(0) > 0
+    val hasPremios = records.select(size(col("premios"))).head(1).exists(_.getInt(0) > 0)
     if (hasPremios) premioRows(records) else pozoRows(records)
   }
 

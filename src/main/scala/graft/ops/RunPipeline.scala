@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -13,19 +13,23 @@ import graft.sources.PozoSource
   * SURVEY §3).
   *
   * Spark-first split: fetch is driver-orchestrated (2 stateful sources —
-  * the reference is the same), everything set-shaped (consensus, scalars,
-  * change detection) runs as DataFrame ops, and the single-record
+  * the reference is the same); the consensus and the single-record
   * control-plane artifacts (raw/normalized/state/report/summary JSONL) are
-  * written atomically (temp+rename — the reference truncate-writes,
-  * `pipeline.py:437`) using Spark's own JSON encoder for byte-compatible
-  * lines: a `to_json` projection over a one-row local relation, which the
-  * optimizer folds at plan time (`ConvertToLocalRelation`), so writing an
-  * artifact runs no Spark job. The state file is read on the driver and
-  * parsed with `from_json` over a local relation, again without a job.
-  * A warm cycle's Spark jobs are the consensus merge's alone. Side-effect
-  * ordering preserved from the reference: raw artifacts → read state →
-  * write normalized+state (unconditionally, *before* the decision) →
-  * report/summary → notify.
+  * Spark projections over one-row local relations, which the optimizer
+  * folds at plan time (`ConvertToLocalRelation`), so a cycle runs no Spark
+  * job, in three plan passes:
+  *  1. [[Consensus.mergeAll]] over the collected payloads, and each
+  *     payload's raw line;
+  *  2. the state read ([[loadState]]);
+  *  3. after the change detection and the decision, the normalized/state,
+  *     report and summary lines.
+  * Every line is Spark's own JSON encoding (`to_json`, byte-identical to
+  * `Dataset.toJSON`), written atomically (temp+rename — the reference
+  * truncate-writes, `pipeline.py:437`). Side-effect ordering preserved
+  * from the reference: raw artifacts → read state → write normalized+state
+  * (unconditionally, whatever the decision) → report/summary → notify.
+  * [[StatePipeline.decide]] is pure, so deciding before the normalized
+  * write changes no side effect.
   */
 object RunPipeline {
 
@@ -84,16 +88,18 @@ object RunPipeline {
       throw new RuntimeException(
         s"No sources returned data for ${cfg.requestedSources.mkString(",")}")
 
-    val payloads = spark.createDataset(collected).toDF()
-
-    // 2-3. Consensus merge + scalars (distributed; SURVEY §2.4).
-    val mergeRows = Observability.span(spark, log, "consensus_merge", now = cfg.now) {
-      Consensus.merge(payloads).orderBy("categoria").collect()
+    // 2-3. Consensus merge (SURVEY §2.4) and the raw lines: plan pass 1.
+    val (mergeRows, rawLines) = Observability.span(spark, log, "consensus_merge",
+        now = cfg.now) {
+      val r = Seq(Tuple1(collected)).toDF("p")
+        .select(Consensus.mergeAll(col("p")), transform(col("p"), p => to_json(p)))
+        .head()
+      (r.getSeq[Row](0).toSeq, r.getSeq[String](1).toSeq)
     }
     val resolved = mergeRows.map(r =>
       r.getAs[String]("categoria") -> r.getAs[Long]("valor")).toMap
 
-    val mismatches = mergeRows.toSeq.flatMap { r =>
+    val mismatches = mergeRows.flatMap { r =>
       val disagreeing = Option(r.getAs[Map[String, scala.collection.Seq[String]]]("disagreeing"))
         .getOrElse(Map.empty).map { case (k, v) => k -> v.toSeq }
       val missing = r.getAs[scala.collection.Seq[String]]("missing_sources").toSeq
@@ -140,13 +146,13 @@ object RunPipeline {
     //    netloc.
     val rawDir = Paths.get(cfg.workDir, "raw")
     Files.createDirectories(rawDir)
-    collected.foreach { p =>
+    collected.zip(rawLines).foreach { case (p, line) =>
       val fname =
         if (cfg.requestedSources.size == 1 && sources.size == 1)
           cfg.requestedSources.head
         else Option(new java.net.URI(p.fuente).getHost)
           .map(_.replace(".", "_")).getOrElse("source")
-      writeAtomic(rawDir.resolve(s"$fname.json"), jsonLine(spark, p))
+      writeAtomic(rawDir.resolve(s"$fname.json"), line + "\n")
     }
 
     // 6. Previous state: PERMISSIVE JSONL parse tolerating corrupt lines
@@ -165,13 +171,7 @@ object RunPipeline {
       }
     }
 
-    // 8. Normalized + state written unconditionally, BEFORE the decision
-    //    (reference `pipeline.py:436-437`).
-    val recordJson = jsonLine(spark, record)
-    writeAtomic(Paths.get(cfg.workDir, "normalized.jsonl"), recordJson)
-    writeAtomic(statePath, recordJson)
-
-    // 9. Decision (reference `pipeline.py:439-459`).
+    // 8. Decision (reference `pipeline.py:439-459`).
     val (status, publishFlag, reason) = StatePipeline.decide(
       unchanged, mismatchRatio, maxDeviation, cfg.mismatchThreshold, cfg.forcePublish)
 
@@ -186,11 +186,15 @@ object RunPipeline {
       prizes_changed = !unchanged, publish = publishFlag,
       publish_reason = reason, api_version = ApiVersion)
 
-    // 10. Report + summary sinks.
-    writeAtomic(Paths.get(cfg.workDir, "comparison_report.json"),
-      jsonLine(spark, report))
-    writeAtomic(Paths.get(cfg.workDir, "run_summary.json"),
-      jsonLine(spark, summary))
+    // 9. Normalized + state written unconditionally (reference
+    //    `pipeline.py:436-437`), then the report + summary sinks; the three
+    //    lines render in plan pass 3.
+    val Seq(recordJson, reportJson, summaryJson) =
+      jsonLines(Seq((record, report, summary)).toDF("record", "report", "summary"))
+    writeAtomic(Paths.get(cfg.workDir, "normalized.jsonl"), recordJson)
+    writeAtomic(statePath, recordJson)
+    writeAtomic(Paths.get(cfg.workDir, "comparison_report.json"), reportJson)
+    writeAtomic(Paths.get(cfg.workDir, "run_summary.json"), summaryJson)
 
     log.emit(Observability.Event("pipeline_end", cfg.now(), cfg.runId,
       Map("decision" -> status, "publish" -> publishFlag.toString,
@@ -200,12 +204,12 @@ object RunPipeline {
     Result(summary, report, record, collected)
   }
 
-  /** One record as a JSON line, byte-identical to `Dataset.toJSON`; the
-    * projection over a one-row local relation folds at plan time, so no
-    * Spark job runs. */
-  private[graft] def jsonLine[T: Encoder](spark: SparkSession, value: T): String =
-    spark.createDataset(Seq(value)).select(to_json(struct(col("*"))))
-      .head().getString(0) + "\n"
+  /** Each column of a one-row frame as a JSON line, byte-identical to
+    * `Dataset.toJSON` of that column's value; the projection over a one-row
+    * local relation folds at plan time, so no Spark job runs. */
+  private[graft] def jsonLines(values: DataFrame): Seq[String] =
+    values.select(values.columns.toSeq.map(c => to_json(col(c))): _*)
+      .head().toSeq.map(_.toString + "\n")
 
   /** PERMISSIVE JSONL state read (reference `pipeline.py:66-79`): lines
     * are read on the driver and parsed by `from_json` over a local

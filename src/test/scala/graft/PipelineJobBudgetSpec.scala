@@ -1,42 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.functions._
 import graft.Model._
-import graft.ops.{Publish, RunPipeline}
+import graft.ops.{Consensus, Publish, RunPipeline}
 import graft.sources.{PozoSource, SheetBackend}
 
 /** The EP1 cycle's Spark job budget, and the byte encoding of its
   * single-record artifacts. At the paper's size (about nine categories ×
   * two sources) a cycle's time is Spark's per-job fixed cost, so the job
-  * count is the figure to hold: the consensus merge runs the only jobs of
-  * `RunPipeline.run`, and a publish step runs one. */
-class PipelineJobBudgetSpec extends SparkSpec {
-
-  private val tagKey = "graft.test.budget"
-  private val jobsByTag = new ConcurrentHashMap[String, AtomicInteger]()
-  private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(t =>
-        jobsByTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet())
-  }
-
-  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(listener)
-  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(listener)
-
-  /** The body's result and the number of Spark jobs it started. */
-  private def jobs[T](tag: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setLocalProperty(tagKey, tag)
-    val out = try body finally sc.setLocalProperty(tagKey, null)
-    TestListenerBus.drain(sc)
-    (out, Option(jobsByTag.get(tag)).map(_.get).getOrElse(0))
-  }
+  * count is the figure to hold: `RunPipeline.run` runs none (its consensus
+  * and artifacts fold at plan time), and a publish step runs one. */
+class PipelineJobBudgetSpec extends JobCounting {
 
   private def stub(n: String, prio: Int, montos: Map[String, Long],
       sha: Option[String] = Some("sha"), ua: Option[String] = Some("TestBot/1.0"),
@@ -60,13 +36,13 @@ class PipelineJobBudgetSpec extends SparkSpec {
   private def toJson[T: Encoder](v: T): String =
     spark.createDataset(Seq(v)).toJSON.head() + "\n"
 
-  test("warm EP1 cycle runs at most 3 Spark jobs; a publish step at most 1") {
+  test("warm EP1 cycle runs no Spark job; a publish step at most 1") {
     val dir = Files.createTempDirectory("graft-budget").toString
     RunPipeline.run(spark, sources, cfg(dir, "budget-cold"))
     // the warm cycle reads the state the cold one wrote
     val (res, runJobs) = jobs("run")(RunPipeline.run(spark, sources, cfg(dir, "budget-warm")))
     assert(res.summary.decision.status == "skip")
-    assert(runJobs <= 3, s"RunPipeline.run started $runJobs jobs")
+    assert(runJobs == 0, s"RunPipeline.run started $runJobs jobs")
 
     import spark.implicits._
     val sheetDir = Paths.get(dir, "sheets").toString
@@ -82,6 +58,15 @@ class PipelineJobBudgetSpec extends SparkSpec {
       Publish.recordToRows(spark.createDataset(Seq(res.record)))))
     assert(diffJobs <= 1, s"dry-run diff started $diffJobs jobs")
     assert(diff == "(No changes detected against the current sheet)")
+  }
+
+  test("Consensus.merge over a DataFrame runs at most 2 Spark jobs") {
+    import spark.implicits._
+    val payloads = sources.map(_.fetch()).toDS().toDF()
+    val (rows, n) = jobs("merge")(Consensus.merge(payloads).collect())
+    assert(rows.map(_.getAs[String]("categoria")).toSeq ==
+      Seq("Jubilazo $1.000.000", "Loto Clásico", "Recargado", "Revancha"))
+    assert(n <= 2, s"Consensus.merge started $n jobs")
   }
 
   test("every artifact is byte-identical to the Dataset.toJSON encoding") {
@@ -105,6 +90,7 @@ class PipelineJobBudgetSpec extends SparkSpec {
 
     val withPremios = r.record.copy(fuente = None, pozos_proximo = Map.empty,
       premios = Seq(Premio("6 aciertos", 900L, 0L), Premio("Tómbola", 1L, 3L)))
-    assert(RunPipeline.jsonLine(spark, withPremios) == toJson(withPremios))
+    assert(RunPipeline.jsonLines(Seq((withPremios, r.summary)).toDF("record", "summary")) ==
+      Seq(toJson(withPremios), toJson(r.summary)))
   }
 }

@@ -10,8 +10,8 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("Aggregator consensus winner matches the window formulation") {
     // Loto: 2-1 majority; Recargado: a 1-1 tie the lower source priority
-    // breaks; Revancha: one vote. The one-shuffle merge and the window
-    // formulation (the test-tree oracle) must both pick these winners.
+    // breaks; Revancha: one vote. The higher-order-function merge and the
+    // window formulation (the test-tree oracle) must both pick these winners.
     val expected = Map("Loto" -> 1000L, "Recargado" -> 500L, "Revancha" -> 9L)
     val payloads = spark.createDataFrame(
       java.util.Arrays.asList(

@@ -1,14 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,28 +13,8 @@ import org.apache.spark.sql.types._
   * infers its schema as `spark.read.parquet` does, later reads start no
   * Spark job, and a rewritten table, a changed inference conf or a second
   * load for a self-join each still get what a plain read would give. */
-class TablesLoadSpec extends SparkSpec {
+class TablesLoadSpec extends JobCounting {
   private val d = sf("sf0.001")
-
-  private val tagKey = "graft.test.load"
-  private val jobsByTag = new ConcurrentHashMap[String, AtomicInteger]()
-  private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(t =>
-        jobsByTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet())
-  }
-
-  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(listener)
-  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(listener)
-
-  /** The body's result and the number of Spark jobs it started. */
-  private def jobs[T](tag: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setLocalProperty(tagKey, tag)
-    val out = try body finally sc.setLocalProperty(tagKey, null)
-    TestListenerBus.drain(sc)
-    (out, Option(jobsByTag.get(tag)).map(_.get).getOrElse(0))
-  }
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
