@@ -20,4 +20,15 @@ object GraftColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** DataFrame from a LogicalPlan that is already analysed: the plan is
+    * marked analysed, so its QueryExecution skips the analyzer. The
+    * Dataset ids a transform copied from an earlier plan's root are
+    * dropped, so each DataFrame starts its own set. */
+  def ofAnalyzed(spark: SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame = {
+    plan.unsetTagValue(classic.Dataset.DATASET_ID_TAG)
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
 }

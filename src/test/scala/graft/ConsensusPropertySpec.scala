@@ -12,8 +12,7 @@ import graft.ops.Consensus
   * small pool so values collide and vote counts tie; empty payloads,
   * total*-only payloads and zero or negative winners all occur. */
 class ConsensusPropertySpec extends JobCounting {
-
-  private type Payload = (String, Int, Map[String, Long])
+  import ConsensusPropertySpec._
 
   private def payloads(ps: Seq[Payload]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(ps.map { case (n, prio, m) =>
@@ -53,25 +52,6 @@ class ConsensusPropertySpec extends JobCounting {
     jobs(tag)(payloadArray(ps)
       .select(transform(Consensus.mergeAll(col("p")), e => struct(fields(e.getField): _*)))
       .head().getSeq[Row](0).toList.map(norm))
-
-  private val categories = Seq("Loto Clásico", "Recargado", "Revancha", "Jubilazo")
-  private val totals = Seq("Total estimado", "TOTAL pozos")
-  private val amount = Gen.oneOf(-7L, 0L, 5L, 1000L, 1200L)
-
-  private def amountsFor(cats: Seq[String]): Gen[Map[String, Long]] =
-    Gen.sequence[List[Option[(String, Long)]], Option[(String, Long)]](cats.map(c =>
-      Gen.option(amount.map(c -> _)))).map(_.flatten.toMap)
-
-  private val montos: Gen[Map[String, Long]] = Gen.frequency(
-    1 -> Gen.const(Map.empty[String, Long]),
-    1 -> amountsFor(totals),
-    6 -> amountsFor(categories ++ totals))
-
-  private val payloadSet: Gen[Seq[Payload]] = for {
-    n <- Gen.choose(1, 4)
-    prios <- Gen.pick(n, 0 until 8)
-    ms <- Gen.listOfN(n, montos)
-  } yield prios.toList.zip(ms).zipWithIndex.map { case ((p, m), i) => (s"s$i", p, m) }
 
   test("merge matches the window-formulation oracle on random payloads") {
     val prop = Prop.forAll(payloadSet) { ps =>
@@ -143,4 +123,30 @@ class ConsensusPropertySpec extends JobCounting {
     // the window formulation listed the name once per payload row
     assert(byCat(ConsensusOracle.merge(df))("Recargado")._2 == List("a", "a"))
   }
+}
+
+object ConsensusPropertySpec {
+
+  /** (source_name, priority, montos). */
+  type Payload = (String, Int, Map[String, Long])
+
+  private val categories = Seq("Loto Clásico", "Recargado", "Revancha", "Jubilazo")
+  private val totals = Seq("Total estimado", "TOTAL pozos")
+  private val amount = Gen.oneOf(-7L, 0L, 5L, 1000L, 1200L)
+
+  private def amountsFor(cats: Seq[String]): Gen[Map[String, Long]] =
+    Gen.sequence[List[Option[(String, Long)]], Option[(String, Long)]](cats.map(c =>
+      Gen.option(amount.map(c -> _)))).map(_.flatten.toMap)
+
+  private val montos: Gen[Map[String, Long]] = Gen.frequency(
+    1 -> Gen.const(Map.empty[String, Long]),
+    1 -> amountsFor(totals),
+    6 -> amountsFor(categories ++ totals))
+
+  /** One to four sources, each with its own priority. */
+  val payloadSet: Gen[Seq[Payload]] = for {
+    n <- Gen.choose(1, 4)
+    prios <- Gen.pick(n, 0 until 8)
+    ms <- Gen.listOfN(n, montos)
+  } yield prios.toList.zip(ms).zipWithIndex.map { case ((p, m), i) => (s"s$i", p, m) }
 }

@@ -7,11 +7,13 @@ import graft.Model._
 import graft.ops.{Consensus, Publish, RunPipeline}
 import graft.sources.{PozoSource, SheetBackend}
 
-/** The EP1 cycle's Spark job budget, and the byte encoding of its
-  * single-record artifacts. At the paper's size (about nine categories ×
-  * two sources) a cycle's time is Spark's per-job fixed cost, so the job
-  * count is the figure to hold: `RunPipeline.run` runs none (its consensus
-  * and artifacts fold at plan time), and a publish step runs one. */
+/** The EP1 cycle's Spark job and analysis budget, and the byte encoding of
+  * its single-record artifacts. At the paper's size (about nine categories
+  * × two sources) a cycle's time is Spark's fixed cost per job and per
+  * plan, so those counts are the figures to hold: a warm `RunPipeline.run`
+  * runs no job (its consensus and artifacts fold at plan time) and no
+  * analyzer rule (its plans are analysed once per session), and a publish
+  * step runs one job. */
 class PipelineJobBudgetSpec extends JobCounting {
 
   private def stub(n: String, prio: Int, montos: Map[String, Long],
@@ -60,6 +62,24 @@ class PipelineJobBudgetSpec extends JobCounting {
     assert(diff == "(No changes detected against the current sheet)")
   }
 
+  test("warm EP1 cycle runs no analyzer rule; the cold cycles analyse its three plans") {
+    // a new session, so its first cycles analyse whatever ran before
+    val s = spark.newSession()
+    val dir = Files.createTempDirectory("graft-analysis").toString
+    val (_, _, cold) = AnalyzerRules.during(s) {
+      RunPipeline.run(s, sources, cfg(dir, "analysis-1"))
+      RunPipeline.run(s, sources, cfg(dir, "analysis-2")) // the first state read
+    }
+    assert(cold.contains("org.apache.spark.sql.catalyst.analysis.Analyzer$ResolveReferences"),
+      s"the cold cycles ran no analysis: $cold")
+    val ((res, runJobs), qes, warm) = AnalyzerRules.during(s)(
+      jobs("analysis-warm")(RunPipeline.run(s, sources, cfg(dir, "analysis-warm"))))
+    assert(res.summary.decision.status == "skip")
+    assert(runJobs == 0, s"RunPipeline.run started $runJobs jobs")
+    assert(qes == 3, s"RunPipeline.run ran $qes QueryExecutions")
+    assert(warm.isEmpty, s"analyzer rules in a warm cycle: $warm")
+  }
+
   test("Consensus.merge over a DataFrame runs at most 2 Spark jobs") {
     import spark.implicits._
     val payloads = sources.map(_.fetch()).toDS().toDF()
@@ -90,7 +110,7 @@ class PipelineJobBudgetSpec extends JobCounting {
 
     val withPremios = r.record.copy(fuente = None, pozos_proximo = Map.empty,
       premios = Seq(Premio("6 aciertos", 900L, 0L), Premio("Tómbola", 1L, 3L)))
-    assert(RunPipeline.jsonLines(Seq((withPremios, r.summary)).toDF("record", "summary")) ==
-      Seq(toJson(withPremios), toJson(r.summary)))
+    assert(RunPipeline.artifactLines(spark, withPremios, r.report, r.summary) ==
+      Seq(toJson(withPremios), toJson(r.report), toJson(r.summary)))
   }
 }
