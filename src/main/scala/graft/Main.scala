@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.col
 import graft.ops.{Notifiers, Publish, RunPipeline}
 import graft.sources._
 
@@ -197,10 +197,9 @@ object Main {
           val current = graft.sources.SheetBackend.readRows(sheetDir, "canonical")
           println(Publish.dryRunDiff(current, rows))
         } else {
-          // truncate+overwrite via the DSv2 connector (format("sheet"))
-          val stringRows = rows.select(rows.columns.map(c =>
-            coalesce(col(c).cast("string"), lit("")).as(c)): _*)
-          stringRows.write.format("sheet")
+          // truncate+overwrite through the sheet connector (format("sheet")),
+          // which writes the rows' string cells from the driver
+          rows.write.format("sheet")
             .option("path", sheetDir).option("worksheet", "canonical")
             .mode("append").save()
           // the rows that landed, read back past the header on the driver:

@@ -1,66 +1,87 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Model._
 
 /** Publish path (reference `polla_app/publish.py`).
   *
-  * Row conversion is set-at-a-time (explode/unpivot, `publish.py:69-116`);
-  * the sheet itself is dimension-sized so the sink collects to the driver
-  * and talks to a pluggable [[SheetsClient]] — the same split the
-  * reference's gspread client implies. Rows land in one worksheet anyway,
-  * so they are ordered by one single-partition sort (`coalesce(1)` +
-  * `sortWithinPartitions`) instead of a range-partitioned `orderBy`: one
-  * Spark job per collect or sheet write, with no sampling job or shuffle.
-  * Dry-run = diff mode: both directions of `exceptAll` plus a rendered
-  * unified-ish text diff (`publish.py:249-266`).
+  * Row conversion unpivots each record (explode/unpivot,
+  * `publish.py:69-116`) in one projection over the records, collected on
+  * the driver: over a local input it folds at plan time and starts no Spark
+  * job. The sheet is dimension-sized, so its rows come back as a local
+  * relation, stably sorted by categoria on the driver in Spark's string
+  * order ([[sheetRows]], the module's one sort policy), and the sinks talk to
+  * a pluggable [[SheetsClient]] — the same split the reference's gspread
+  * client implies. Dry-run = diff mode: both directions of `exceptAll` plus
+  * a rendered unified-ish text diff (`publish.py:249-266`).
   */
 object Publish {
 
   /** Pozos-only 4-col rows: sorteo, fecha, categoria, pozo_clp
-    * (`publish.py:95-100`). Map iteration order is not semantic in Spark —
-    * rows are ordered by categoria, which our sinks make explicit. */
-  def pozoRows(records: Dataset[NormalizedRecord]): DataFrame =
-    records.toDF()
-      .select(col("sorteo"), col("fecha"),
-        explode(col("pozos_proximo")).as(Seq("categoria", "pozo_clp")))
-      .coalesce(1).sortWithinPartitions("categoria")
+    * (`publish.py:95-100`). */
+  private val pozoSchema: StructType = StructType(Seq(
+    StructField("sorteo", LongType), StructField("fecha", StringType),
+    StructField("categoria", StringType, nullable = false),
+    StructField("pozo_clp", LongType, nullable = false)))
 
-  /** Premios-mode 8-col rows (`publish.py:80-92`). */
-  def premioRows(records: Dataset[NormalizedRecord]): DataFrame =
-    records.toDF()
-      .withColumn("pozos_proximo_json", to_json(col("pozos_proximo")))
-      .withColumn("provenance_json", to_json(col("provenance")))
-      .select(col("sorteo"), col("fecha"), col("fuente"),
-        explode(col("premios")).as("p"),
-        col("pozos_proximo_json"), col("provenance_json"))
-      .select(col("sorteo"), col("fecha"), col("fuente"),
-        col("p.categoria").as("categoria"),
-        col("p.premio_clp").as("premio_clp"),
-        col("p.ganadores").as("ganadores"),
-        col("pozos_proximo_json").as("pozos_proximo"),
-        col("provenance_json").as("provenance"))
-      .coalesce(1).sortWithinPartitions("categoria")
+  /** Premios-mode 8-col rows (`publish.py:80-92`), map and provenance as
+    * JSON cells. */
+  private val premioSchema: StructType = StructType(Seq(
+    "sorteo" -> LongType, "fecha" -> StringType, "fuente" -> StringType,
+    "categoria" -> StringType, "premio_clp" -> LongType, "ganadores" -> LongType,
+    "pozos_proximo" -> StringType, "provenance" -> StringType)
+    .map { case (n, t) => StructField(n, t) })
 
-  /** Mode switch (`publish.py:69-79`): premios present → 8-col else 4-col;
-    * the first record decides, an empty dataset gives 4-col rows. */
+  /** Discrepancy rows (`publish.py:103-116`). */
+  private val mismatchSchema: StructType = StructType(Seq(
+    "sorteo" -> LongType, "categoria" -> StringType, "consensus" -> StringType,
+    "disagreeing" -> StringType, "missing_sources" -> StringType)
+    .map { case (n, t) => StructField(n, t) })
+
+  /** Rows as a local relation, ordered by categoria: a stable sort (input
+    * order among equal categorias, nulls first) in Spark's binary UTF-8
+    * string order, so a sheet reads as a `sortWithinPartitions` over the
+    * rows in input order would. */
+  private def sheetRows(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame = {
+    val at = schema.fieldIndex("categoria")
+    val byCategoria: Ordering[Row] = (a, b) =>
+      (Option(a.getString(at)), Option(b.getString(at))) match {
+        case (Some(x), Some(y)) => UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+        case (x, y) => x.isDefined.compare(y.isDefined)
+      }
+    spark.createDataFrame(rows.sorted(byCategoria).asJava, schema)
+  }
+
+  /** Mode switch (`publish.py:69-79`): premios present → 8-col rows, else
+    * 4-col; the first record decides, an empty dataset gives 4-col rows.
+    * One projection carries the mode probe, each record's entries and its
+    * JSON cells; each record's entries become its rows. */
   def recordToRows(records: Dataset[NormalizedRecord]): DataFrame = {
-    val hasPremios = records.select(size(col("premios"))).head(1).exists(_.getInt(0) > 0)
-    if (hasPremios) premioRows(records) else pozoRows(records)
+    val cells = records.toDF().select(size(col("premios")), col("sorteo"), col("fecha"),
+      col("fuente"), map_entries(col("pozos_proximo")), col("premios"),
+      to_json(col("pozos_proximo")), to_json(col("provenance"))).collect().toSeq
+    if (cells.headOption.exists(_.getInt(0) > 0))
+      sheetRows(records.sparkSession, premioSchema, cells.flatMap(r => r.getSeq[Row](5).map(p =>
+        Row(r.get(1), r.get(2), r.get(3), p.get(0), p.get(1), p.get(2), r.get(6), r.get(7)))))
+    else
+      sheetRows(records.sparkSession, pozoSchema, cells.flatMap(r => r.getSeq[Row](4).map(e =>
+        Row(r.get(1), r.get(2), e.get(0), e.get(1)))))
   }
 
   /** Discrepancy rows (`publish.py:103-116`): sorteo, categoria,
     * consensus/disagreeing as JSON, missing as ", "-joined. */
-  def mismatchRows(report: Dataset[Report]): DataFrame =
-    report.toDF()
-      .select(col("last_draw.sorteo").as("sorteo"), explode(col("mismatches")).as("m"))
-      .select(col("sorteo"),
-        col("m.categoria").as("categoria"),
-        to_json(col("m.consensus")).as("consensus"),
-        to_json(col("m.disagreeing")).as("disagreeing"),
-        array_join(col("m.missing_sources"), ", ").as("missing_sources"))
-      .coalesce(1).sortWithinPartitions("categoria")
+  def mismatchRows(report: Dataset[Report]): DataFrame = {
+    val cells = report.toDF().select(col("last_draw.sorteo"),
+      transform(col("mismatches"), m => struct(m("categoria"), to_json(m("consensus")),
+        to_json(m("disagreeing")), array_join(m("missing_sources"), ", "))))
+      .collect().toSeq
+    sheetRows(report.sparkSession, mismatchSchema, cells.flatMap(r =>
+      r.getSeq[Row](1).map(m => Row(r.get(0) +: m.toSeq: _*))))
+  }
 
   /** Header by row width (`publish.py:136-150`). */
   def headerFor(width: Int): Seq[String] =

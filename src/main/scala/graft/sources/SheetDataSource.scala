@@ -1,157 +1,103 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, TableScan}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import graft.ops.Publish
 
-/** `format("sheet")` — DataSource V2 worksheet connector (SURVEY §2.1,
-  * reference `publish.py:161-193`).
+/** `format("sheet")` — the worksheet connector (SURVEY §2.1, reference
+  * `publish.py:161-193`), a DataSource V1 provider.
   *
-  * Semantics mirror the Sheets sink: a write is always **clear + update**
-  * (truncate + overwrite of one worksheet, header row included), the read
-  * path serves the dry-run diff. Worksheets are tiny by construction
-  * (reference creates 200×10 sheets), so executors ship their rows to the
-  * driver via commit messages and the driver performs the single
-  * "API call" — here a TSV file per worksheet under `path`, where a real
-  * deployment would swap in the Sheets client without touching the plan.
-  *
-  * Row order: partition index then row order within partition — a sorted
-  * DataFrame (range-partitioned) lands in the sheet in global order.
+  * Semantics mirror the Sheets sink: a write (Append or Overwrite) is
+  * always **clear + update** of one worksheet, header row included; the
+  * read path serves the dry-run diff. Worksheets are tiny by construction
+  * (the reference creates 200×10 sheets), so the write casts every column
+  * to string in one projection (null → empty cell), collects it on the
+  * driver and makes the single [[SheetBackend]] `clearAndUpdate` call. Over
+  * a local relation that projection folds at plan time and the write starts
+  * no Spark job; any other input runs one collect job, its rows in
+  * partition order. A real deployment swaps in the Sheets client
+  * ([[RestSheets]]) behind the same `Publish.SheetsClient` surface.
   */
-class SheetDataSource extends TableProvider with DataSourceRegister {
+class SheetDataSource extends CreatableRelationProvider with RelationProvider
+    with DataSourceRegister {
   override def shortName(): String = "sheet"
 
-  // Writes may target a worksheet that doesn't exist yet: let Spark hand
-  // us the query schema instead of requiring one inferred from disk.
-  override def supportsExternalMetadata(): Boolean = true
+  private def worksheet(parameters: Map[String, String]): String =
+    parameters.getOrElse("worksheet", "canonical")
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val file = SheetBackend.file(options.get("path"), options.get("worksheet"))
-    if (Files.exists(file)) {
-      val header = Files.readAllLines(file).asScala.headOption.getOrElse("")
-      StructType(header.split("\t", -1).toIndexedSeq
-        .filter(_.nonEmpty).map(StructField(_, StringType)))
-    } else StructType(Nil)
+  private def backend(parameters: Map[String, String]): SheetBackend = {
+    val path = parameters.get("path")
+    require(path.isDefined, "option 'path' is required")
+    new SheetBackend(path.get)
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new SheetTable(schema, properties.get("path"), properties.get("worksheet"))
+  override def createRelation(sqlContext: SQLContext,
+      parameters: Map[String, String]): BaseRelation =
+    new SheetRelation(sqlContext, backend(parameters), worksheet(parameters))
+
+  override def createRelation(sqlContext: SQLContext, mode: SaveMode,
+      parameters: Map[String, String], data: DataFrame): BaseRelation = {
+    // the error a TableProvider source raises for these modes
+    if (mode != SaveMode.Append && mode != SaveMode.Overwrite)
+      throw new AnalysisException("UNSUPPORTED_DATA_SOURCE_SAVE_MODE",
+        Map("source" -> shortName(), "createMode" -> s""""${mode.name()}""""))
+    val names = data.schema.fieldNames.toSeq
+    val cells = data.select(names.map(c =>
+      coalesce(col("`" + c.replace("`", "``") + "`").cast(StringType), lit(""))): _*)
+      .collect().toSeq.map(r => r.toSeq.map(_.asInstanceOf[String]))
+    backend(parameters).clearAndUpdate(worksheet(parameters), names +: cells)
+    createRelation(sqlContext, parameters)
+  }
 }
 
-object SheetBackend {
-  def file(path: String, worksheet: String): java.nio.file.Path = {
-    require(path != null, "option 'path' is required")
-    val ws = Option(worksheet).getOrElse("canonical")
-    Paths.get(path, s"$ws.tsv")
-  }
+/** A worksheet as a string table: the header row names the columns. */
+class SheetRelation(val sqlContext: SQLContext, backend: SheetBackend, worksheet: String)
+    extends BaseRelation with TableScan {
+  private lazy val values = backend.getAllValues(worksheet)
 
-  /** Atomic truncate+overwrite, the `ws.clear(); ws.update(...)` pair. */
-  def clearAndUpdate(path: String, worksheet: String,
-      header: Seq[String], rows: Seq[Seq[String]]): Unit = {
-    val f = file(path, worksheet)
-    Files.createDirectories(f.getParent)
-    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-    val content = (header +: rows).map(_.mkString("\t")).mkString("\n") + "\n"
-    Files.writeString(tmp, content)
-    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  override lazy val schema: StructType = StructType(
+    values.headOption.getOrElse(Nil).filter(_.nonEmpty).map(StructField(_, StringType)))
 
-  def readRows(path: String, worksheet: String): Seq[Seq[String]] = {
-    val f = file(path, worksheet)
+  override def buildScan(): RDD[Row] = {
+    val width = schema.length
+    val rows = values.drop(1).map(r => Row.fromSeq(Seq.tabulate(width)(i => r.lift(i).getOrElse(""))))
+    sqlContext.sparkContext.parallelize(rows, 1)
+  }
+}
+
+/** The file-backed `Publish.SheetsClient`: one TSV file per worksheet
+  * under `path`, where a real deployment talks to the Sheets API. */
+final class SheetBackend(path: String) extends Publish.SheetsClient {
+
+  def getAllValues(worksheet: String): Seq[Seq[String]] = {
+    val f = SheetBackend.file(path, worksheet)
     if (!Files.exists(f)) Seq.empty
     else Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
       .map(_.split("\t", -1).toIndexedSeq)
   }
-}
 
-class SheetTable(schema: StructType, path: String, worksheet: String)
-    extends Table with SupportsRead with SupportsWrite {
-
-  override def name(): String = s"sheet:${Option(worksheet).getOrElse("canonical")}"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan {
-      override def readSchema(): StructType = schema
-      override def toBatch: Batch = new Batch {
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(SheetPartition(path, Option(worksheet).getOrElse("canonical")))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new SheetReaderFactory(schema)
-      }
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new SheetWriteBuilder(info.schema(), path, Option(worksheet).getOrElse("canonical"))
-}
-
-case class SheetPartition(path: String, worksheet: String) extends InputPartition
-
-class SheetReaderFactory(schema: StructType) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val sp = p.asInstanceOf[SheetPartition]
-    val rows = SheetBackend.readRows(sp.path, sp.worksheet).drop(1) // header
-    new PartitionReader[InternalRow] {
-      private val it = rows.iterator
-      private var cur: Seq[String] = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
-      override def get(): InternalRow = InternalRow.fromSeq(
-        schema.indices.map(i =>
-          UTF8String.fromString(if (i < cur.length) cur(i) else "")))
-      override def close(): Unit = ()
-    }
+  /** Atomic truncate+overwrite, the `ws.clear(); ws.update(...)` pair. */
+  def clearAndUpdate(worksheet: String, values: Seq[Seq[String]]): Int = {
+    val f = SheetBackend.file(path, worksheet)
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
+    Files.writeString(tmp, values.map(_.mkString("\t") + "\n").mkString)
+    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
+    values.length
   }
 }
 
-class SheetWriteBuilder(schema: StructType, path: String, worksheet: String)
-    extends WriteBuilder with SupportsTruncate {
-  // Every sheet write IS a truncate (clear+update) — accept and ignore.
-  override def truncate(): WriteBuilder = this
+object SheetBackend {
+  def file(path: String, worksheet: String): java.nio.file.Path =
+    Paths.get(path, s"$worksheet.tsv")
 
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new BatchWrite {
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new SheetWriterFactory(schema)
-      override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        val rows = messages.collect { case m: SheetRowsMessage => m }
-          .sortBy(_.partitionId).flatMap(_.rows).toSeq
-        SheetBackend.clearAndUpdate(path, worksheet,
-          schema.fieldNames.toIndexedSeq, rows)
-      }
-      override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-    }
-  }
-}
-
-case class SheetRowsMessage(partitionId: Int, rows: Seq[Seq[String]])
-    extends WriterCommitMessage
-
-class SheetWriterFactory(schema: StructType) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val buf = scala.collection.mutable.ListBuffer[Seq[String]]()
-      override def write(r: InternalRow): Unit =
-        buf += schema.indices.map { i =>
-          if (r.isNullAt(i)) ""
-          else r.get(i, schema(i).dataType).toString
-        }
-      override def commit(): WriterCommitMessage = SheetRowsMessage(partitionId, buf.toList)
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
+  def readRows(path: String, worksheet: String): Seq[Seq[String]] =
+    new SheetBackend(path).getAllValues(worksheet)
 }

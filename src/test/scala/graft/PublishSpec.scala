@@ -94,6 +94,60 @@ class PublishSpec extends SparkSpec {
     assert(rows.head.getAs[String]("missing_sources") == "b, d")
   }
 
+  test("recordToRows matches the explode twin: schema, rows and order") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    // U+FF21 sorts before a surrogate pair in UTF-16 but after it in UTF-8,
+    // so the order must be Spark's binary UTF-8 one
+    val cats = Seq("Loto", "Desquite", "Ñandú", "loto", "\uFF21", "\uD83D\uDE00", "", "Loto ")
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.length))
+    def rec(withPremios: Boolean): NormalizedRecord = NormalizedRecord(
+      if (rnd.nextInt(4) == 0) None else Some(5400L + rnd.nextInt(3)),
+      if (rnd.nextInt(4) == 0) None else Some(s"2026-04-2${rnd.nextInt(9)}"),
+      if (rnd.nextBoolean()) None else Some(pick(Seq("https://a.cl/", "https://b.cl/"))),
+      "full",
+      if (!withPremios) Seq.empty
+      else Seq.fill(rnd.nextInt(4))(Premio(
+        if (rnd.nextInt(8) == 0) null else pick(cats), rnd.nextInt(1000), rnd.nextInt(3))),
+      Seq.fill(rnd.nextInt(4))(pick(cats) -> rnd.nextInt(1000).toLong).toMap,
+      prov)
+    val bare = NormalizedRecord(None, None, None, "full", Seq.empty, Map.empty, prov)
+    val cases = Seq(Seq.empty[NormalizedRecord], Seq(bare, rec(withPremios = true))) ++
+      (1 to 40).map(i => Seq.fill(1 + rnd.nextInt(4))(rec(withPremios = i % 3 != 0)))
+    val modes = cases.map { recs =>
+      val got = Publish.recordToRows(spark.createDataset(recs))
+      val want = PublishOracle.recordToRows(spark.createDataset(recs))
+      assert(got.schema == want.schema, recs)
+      assert(got.collect().toSeq == want.collect().toSeq, recs)
+      got.columns.length
+    }
+    assert(modes.toSet == Set(4, 8)) // both modes are covered
+  }
+
+  test("mismatchRows matches the explode twin: schema, rows and order") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val cats = Seq("Loto", "Desquite", "Ñandú", "\uFF21", "\uD83D\uDE00", "")
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.length))
+    def votes(): Map[String, Seq[String]] =
+      Seq.fill(rnd.nextInt(3))(s"${rnd.nextInt(5) * 100}" -> Seq.fill(1 + rnd.nextInt(2))(
+        pick(Seq("openloto", "polla")))).toMap
+    def report(): Report = Report(
+      RunInfo("r", "t", Seq("pozos"), 30, 3, fail_fast = false),
+      LastDraw(if (rnd.nextInt(4) == 0) None else Some(5190L + rnd.nextInt(9)), None),
+      Decision("quarantine", "degraded", 2, 1, "why"),
+      Seq.fill(rnd.nextInt(4))(Mismatch(if (rnd.nextInt(8) == 0) null else pick(cats),
+        votes(), votes(), if (rnd.nextBoolean()) None else Some(rnd.nextDouble()),
+        Seq.fill(rnd.nextInt(3))(pick(Seq("a", "b", "ñ"))))),
+      ApiVersion)
+    for (reps <- Seq(Seq.empty[Report]) ++ Seq.fill(30)(Seq.fill(1 + rnd.nextInt(3))(report()))) {
+      val got = Publish.mismatchRows(spark.createDataset(reps))
+      val want = PublishOracle.mismatchRows(spark.createDataset(reps))
+      assert(got.schema == want.schema, reps)
+      assert(got.collect().toSeq == want.collect().toSeq, reps)
+    }
+  }
+
   test("publish gate: status prefix + summary override") {
     assert(Publish.publishAllowed("publish", None))
     assert(Publish.publishAllowed("publish_forced", None))
