@@ -12,7 +12,11 @@ another commit is emptied first), then runs
 `perfbench/run.py --workload W --seed S --seconds T --trace 0` in each, one
 pair per seed, alternating which side runs first. `--aa` adds a third leg,
 a second export of the base commit, run in the same pair: its deltas
-against the base leg show how far identical code moves between runs.
+against the base leg show how far identical code moves between runs. With
+`--aa` the pairs cycle through the six orders of the three legs (`ORDERS`),
+so run position cancels out of every comparison: each leg takes each
+position once in every three pairs, and precedes each other leg equally
+often in every six. Seed counts that are a multiple of six balance exactly.
 
 Prints, per end-to-end metric of BENCHMARK.json, each leg's median and
 quartiles, the median paired delta (head vs base, in %) and the pairs the
@@ -32,6 +36,11 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The --aa run orders: the three rotations of base/head/aa, then the three
+# of its reverse — a Latin square per half, every permutation per cycle.
+ORDERS = [["base", "head", "aa"], ["head", "aa", "base"], ["aa", "base", "head"],
+          ["aa", "head", "base"], ["head", "base", "aa"], ["base", "aa", "head"]]
 
 
 def export(ref, dest):
@@ -130,9 +139,10 @@ def main():
 
     pairs = []
     for i, seed in enumerate(seeds):
-        order = ["base", "head"] if i % 2 == 0 else ["head", "base"]
         if a.aa:
-            order.insert(1, "aa")
+            order = ORDERS[i % len(ORDERS)]
+        else:
+            order = ["base", "head"] if i % 2 == 0 else ["head", "base"]
         pair = {"seed": seed, "order": order}
         for leg in order:
             pair[leg] = run_once(dirs[leg], a.workload, seed, a.seconds)

@@ -22,6 +22,4 @@ OPENS=(java.base/java.lang java.base/java.lang.invoke \
   java.base/sun.util.calendar)
 FLAGS=()
 for p in "${OPENS[@]}"; do FLAGS+=(--add-opens "$p=ALL-UNNAMED"); done
-exec java -cp "$CP" "${FLAGS[@]}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  "-Xmx$MEM" "$CLS" "$@"
+exec java -cp "$CP" "${FLAGS[@]}" "-Xmx$MEM" "$CLS" "$@"

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.ops.Observability.{StageMetrics, StageRecord}
 
 /** Benchmark driver: times every declared query at the SF directory in
   * `SPARK_GRAFT_SF_DIR`. Prints ONE compact JSON line sized to fit the
@@ -41,8 +41,19 @@ import org.apache.spark.sql.SparkSession
   * per-query `oracle` map) so a perf regression is visible in the bench
   * artifact itself.
   *
+  * Per-stage attribution: every completed stage of a timed query is
+  * written as one JSON line (query, stage, attempt, tasks, wall/run/GC
+  * seconds, input records, shuffle read/write MB and records, memory/disk
+  * spill MB, the stage's call-site name) to `<bench_out>_stages.jsonl`
+  * beside the full artifact, from the kept pass. A query's
+  * `shuf_write_mb` sum over its lines, divided by the runs, is its
+  * `shuffle_mb`. The stage stream says which exchange/sort/agg owns the
+  * wall and the spill without a per-operator harness.
+  *
   * `SPARK_GRAFT_ONLY=name1,name2` restricts the run (local iteration);
-  * `SPARK_GRAFT_RUNS=n` overrides the per-query run count (default 2).
+  * `SPARK_GRAFT_RUNS=n` overrides the per-query run count (default 2) —
+  * `SPARK_GRAFT_ONLY=a,b SPARK_GRAFT_RUNS=1` is a one-run stage probe.
+  * The session is [[Session.suite]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -50,7 +61,6 @@ object Bench {
     // would emit invalid JSON, so pin the root locale process-wide
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -95,69 +105,7 @@ object Bench {
     }
     val loadAvg = load()
     val gatePassed = loadAvg <= maxLoad
-    // Shuffle width defaults to the thread count (right for ≤ sf1 in
-    // this sandbox) but scales independently via env: at sf10 a 32-wide
-    // shuffle makes each partition 10× the sf1 size and the heavy aggs
-    // start spilling — on a real cluster partition count grows with
-    // data (AQE coalesces excess; it never splits an oversized
-    // non-skew-join partition, so the STATIC width must not undershoot).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // Disk-footprint knobs for the big-SF probes (learned at sf100:
-    // graph_pagerank's und build died on local disk — uncompressed
-    // localCheckpoint blocks + lz4 shuffles exceeded the volume). All
-    // env-scaled like SPARK_GRAFT_SHUFFLE_PARTITIONS:
-    // SPARK_GRAFT_BLOCK_COMPRESS (default true) controls rdd +
-    // checkpoint block compression — A/B'd interleaved at sf0.1
-    // (71.1 s on vs 72.9 s off, per-query deltas within host noise)
-    // and required at sf100 (the uncompressed und pin alone was
-    // ~40 GB), so on is the default; SPARK_GRAFT_IO_CODEC=zstd
-    // halves shuffle-file bytes for some CPU — the trade a real cluster
-    // makes when shuffle storage, not cores, is the binding constraint.
-    val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-    val blockCompress =
-      sys.env.getOrElse("SPARK_GRAFT_BLOCK_COMPRESS", "true")
-    // AQE's partition coalescing targets BYTES (advisory 64 MB default)
-    // and cannot see per-partition aggregation-state volume: at sf100
-    // graph_pagerank's contribution reduce was coalesced 1024 → 33
-    // tasks on a 1.6 GB partial-agg exchange whose reduce side
-    // hash-aggregates ~70 M rows/task — 40 GB of spill per iteration
-    // (r17 stage log). Unlike containment (where map-side agg reduced
-    // ~10% and an explicit repartition of the raw stream was cheap),
-    // here the partial agg reduces ~15× and must stay — so the honest
-    // lever is the advisory itself, env-scoped per run like the static
-    // shuffle width (a smaller byte target ⇒ more reduce tasks ⇒
-    // bounded agg state), not a plan rewrite that re-shuffles raw rows.
-    val advisoryMb = sys.env.get("SPARK_GRAFT_ADVISORY_MB").map(_.toInt)
-    // SPARK_GRAFT_AQE=false disables adaptive execution for an A/B:
-    // AQE turns every exchange into a separate job with a re-planning
-    // round trip — pure overhead when partitions are already tiny.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = {
-      val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.rdd.compress", blockCompress)
-      .config("spark.checkpoint.compress", blockCompress)
-      .config("spark.io.compression.codec", ioCodec)
-      .config("spark.ui.enabled", "false")
-      advisoryMb.foreach(mb => b.config(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${mb}m"))
-      b.getOrCreate()
-    }
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CHECKPOINT_DIR switches every Materialize pin from
-    // localCheckpoint (executor-memory blocks) to RELIABLE compressed
-    // checkpoints — the 1000-executor configuration (Graph.pageRank's
-    // Scaladoc) and the big-SF survival knob on this box: at sf100 the
-    // und edge pin unrolled ~600 MB deserialized per partition × 32
-    // concurrent tasks through MemoryStore and OOM'd a 64 g heap, where
-    // the reliable path streams each partition straight to disk.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
-      .foreach(d => spark.conf.set(graft.ops.Materialize.ConfKey, d))
+    val spark = Session.build(Session.suite())
     // Untimed warmup: JVM/codegen/parquet-driver init would otherwise be
     // charged to whichever query happens to run first.
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
@@ -168,20 +116,12 @@ object Bench {
     spark.read.parquet(s"$sfDir/region.parquet").count()
     spark.read.parquet(s"$sfDir/documents.parquet").count()
     spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-    // Shuffle accounting: total shuffle-write bytes per query, from a
-    // stage listener. Stage-completed events are delivered async, so the
-    // attribution is approximate at the boundary (a short drain pause
-    // after each query catches effectively all of it) — good enough for
-    // the artifact's purpose: making a silently-added shuffle visible in
-    // BENCH diffs without a plan dump.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
+    // Stage accounting (shuffle_mb and the stage lines): each query runs
+    // labelled, so its stages are its own. Stage-completed events are
+    // delivered async; a short drain pause after each query lets the bus
+    // catch up before its stages are taken.
+    val stageMetrics = new StageMetrics
+    spark.sparkContext.addSparkListener(stageMetrics)
     def drainListeners(): Unit = Thread.sleep(120)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -204,58 +144,47 @@ object Bench {
     // load is re-sampled after every query, not only at the start: the r5
     // artifact was polluted by a spike that landed MID-run and the
     // start-only gate could not see it. `load_max` makes that visible.
-    // per-query hygiene (r10 verdict item 4): a 139-query pass in ONE
-    // JVM accumulates session state — persisted frames a query left
-    // behind (SharedIndex postings), localCheckpoint blocks from the CC
-    // rounds (freed only when the driver GC runs ContextCleaner) — and
-    // the sf10 full-suite read measurably higher than isolated per-op
-    // probes from the GC pressure. Between queries (never between the
-    // runs of one query — that would distort min-of-2): drop the cache,
-    // and nudge a GC so ContextCleaner releases dead checkpoint/shuffle
-    // state. Untimed. SPARK_GRAFT_NO_HYGIENE=1 restores the old packing.
-    val hygiene = !sys.env.contains("SPARK_GRAFT_NO_HYGIENE")
-    // The timed ACTION (r17): `noop` (default) writes to Spark's no-op
-    // sink — every declared output column is computed and materialized,
-    // none of the I/O is charged. `count` restores the pre-r17 action,
-    // which let Catalyst PRUNE declared work: count() needs no columns,
-    // so e.g. graph_pagerank's rank join (left outer against a
-    // distinct-keyed aggregate) was eliminated and the entire power
-    // iteration never ran — StageLog at sf10 showed the "41 s" suite
-    // number was the graph BUILD alone, and any projection-final query
-    // was billing scan-only work against a DuckDB oracle that always
-    // materializes its full result. noop measures what Verify dumps and
-    // what the oracle pays — the comparable thing.
-    val action = sys.env.getOrElse("SPARK_GRAFT_ACTION", "noop")
+    // The timed ACTION (r17) writes to Spark's no-op sink — every declared
+    // output column is computed and materialized, none of the I/O is
+    // charged. The pre-r17 count() let Catalyst PRUNE declared work:
+    // count() needs no columns, so e.g. graph_pagerank's rank join (left
+    // outer against a distinct-keyed aggregate) was eliminated and the
+    // entire power iteration never ran — the sf10 stage log showed the
+    // "41 s" suite number was the graph BUILD alone, and any
+    // projection-final query was billing scan-only work against a DuckDB
+    // oracle that always materializes its full result. noop measures
+    // what Verify dumps and what the oracle pays — the comparable thing.
     def runAction(df: org.apache.spark.sql.DataFrame): Unit =
-      if (action == "count") { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
     // a pass is dirty when EITHER the load gate trips OR any query saw
     // steal above this share of its cpu-seconds — 5% of 32 cores for a
     // whole query is far beyond the ~0-1% idle baseline measured here
     val maxStealPct =
       sys.env.getOrElse("SPARK_GRAFT_MAX_STEAL_PCT", "5.0").toDouble
     final case class QRes(name: String, sec: Double, shuffleMb: Double,
-      stealPct: Double, iowaitPct: Double)
+      stealPct: Double, iowaitPct: Double, stages: Seq[StageRecord])
     def timedPass(): (Seq[QRes], Double, Double) = {
       var loadMax = load()
       var stealMax = 0.0
       val rs = selected.map { case (name, fn) =>
         drainListeners()
-        val s0 = shuffleBytes.get()
+        stageMetrics.take() // a previous query's stages that landed late
         val cpu0 = cpuStat()
         val tq0 = System.nanoTime()
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          try { runAction(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-          catch {
-            // the -1 sentinel is handled downstream, but an artifact that
-            // records -1 with zero diagnostic cannot explain itself (r13
-            // verdict item 5) — name the failure on stderr, never stdout
-            // (stdout carries the one-line JSON contract)
-            case e: Throwable =>
-              System.err.println(s"bench: $name failed: " +
-                s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
-              -1.0
+        val times = StageMetrics.labelled(spark, name) {
+          (1 to runs).map { _ =>
+            val t0 = System.nanoTime()
+            try { runAction(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+            catch {
+              // the -1 sentinel is handled downstream, but an artifact that
+              // records -1 with zero diagnostic cannot explain itself (r13
+              // verdict item 5) — name the failure on stderr, never stdout
+              // (stdout carries the one-line JSON contract)
+              case e: Throwable =>
+                System.err.println(s"bench: $name failed: " +
+                  s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
+                -1.0
+            }
           }
         }
         drainListeners()
@@ -269,7 +198,17 @@ object Bench {
         val iowaitPct = tools.ProcStat.pct(cpu0, cpu1, wallQ, ncpus, _._2)
         // a missing sample (-1 sentinel) must not drive the dirt gate
         if (stealPct >= 0) stealMax = math.max(stealMax, stealPct)
-        val shuffleMb = (shuffleBytes.get() - s0) / 1e6 / runs
+        val stages = stageMetrics.take()
+        val shuffleMb = stages.map(_.shuffleWriteBytes).sum / 1e6 / runs
+        // per-query hygiene (r10 verdict item 4): a 139-query pass in ONE
+        // JVM accumulates session state — persisted frames a query left
+        // behind (SharedIndex postings), localCheckpoint blocks from the CC
+        // rounds (freed only when the driver GC runs ContextCleaner) — and
+        // the sf10 full-suite read measurably higher than isolated per-op
+        // probes from the GC pressure. Between queries (never between the
+        // runs of one query — that would distort min-of-2): drop the cache,
+        // and nudge a GC so ContextCleaner releases dead checkpoint/shuffle
+        // state. Untimed.
         // gc → drain → gc: the first GC lets ContextCleaner DISCOVER the
         // dead checkpoint/shuffle/broadcast refs (weak-ref processing),
         // the pause lets its async unpersist queue drain, and the second
@@ -278,14 +217,12 @@ object Bench {
         // query pass read ids_stable_assign at 8.76 s where isolated
         // min-of-3 measures 0.78 s). Still untimed, still never between
         // the runs of one query.
-        if (hygiene) {
-          spark.catalog.clearCache(); System.gc()
-          Thread.sleep(250); System.gc()
-        }
+        spark.catalog.clearCache(); System.gc()
+        Thread.sleep(250); System.gc()
         // a query is failed only if EVERY run failed; one bad run must not
         // discard the other run's valid timing
         QRes(name, times.filter(_ >= 0).minOption.getOrElse(-1.0),
-          shuffleMb, stealPct, iowaitPct)
+          shuffleMb, stealPct, iowaitPct, stages)
       }
       (rs, loadMax, stealMax)
     }
@@ -372,7 +309,7 @@ object Bench {
     // values ARRAY in query-NAME order ("q_order":"name_asc" — the name
     // list is `SparkEntry.queries.keys.toSeq.sorted`, reconstructible
     // from Queries.scala). The full name-keyed line goes to the durable
-    // file copy, committed per round as bench_r{N}_full.json.
+    // file copy (the committed ones are evidence/bench/bench_r{N}_full.json).
     val qv = results.map(r => if (r.sec < 0) "-1" else f"${r.sec}%.3f")
       .mkString("[", ",", "]")
     val compactOracle = oracleStats match {
@@ -402,6 +339,9 @@ object Bench {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes("UTF-8"))
+    val stagesFile = outFile.stripSuffix(".json") + "_stages.jsonl"
+    java.nio.file.Files.write(java.nio.file.Paths.get(stagesFile),
+      results.flatMap(_.stages).map(_.json + "\n").mkString.getBytes("UTF-8"))
     spark.stop()
   }
 

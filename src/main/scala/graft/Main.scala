@@ -29,17 +29,7 @@ object Main {
   private def flag(args: Array[String], name: String): Boolean =
     args.contains(name)
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("pollaspark")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession = Session.build(Session.cli())
 
   private val OpenlotoUrl = "https://www.openloto.cl/pozo-del-loto.html"
   private val PollaUrl = "https://www.polla.cl/es/"

@@ -1653,7 +1653,7 @@ object Queries {
       (s, d) => {
         // norm is attached ONCE per vector, not recomputed per pair row:
         // cosine(ea, eb) inlines 3 VecDot evaluations per pair, and the
-        // in-bucket pair count grows ~n²/256 — at sf100 (BENCH_sf100_r15)
+        // in-bucket pair count grows ~n²/256 — at sf100 (evidence/bench/BENCH_sf100_r15)
         // the 3× per-pair cost read 511 s wall, 104× per decade. Same
         // value bit-for-bit (norm is a pure function of the vector; the
         // division is the same expression), 1/3 the pair-stage flops.

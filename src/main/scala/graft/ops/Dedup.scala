@@ -267,7 +267,7 @@ object Dedup {
     * keys, 16 bits each at the default) saturated at scale: a FIXED
     * 65,536-key space per block makes in-block collision pairs grow
     * ~n² once n ≫ 65k — measured at sf100 (5 M docs) as 660.6 s wall /
-    * 14.8 GB shuffle, 97×/17× per decade (BENCH_sf100_r15, SCALE.md
+    * 14.8 GB shuffle, 97×/17× per decade (evidence/bench/BENCH_sf100_r15, SCALE.md
     * r15). The 3-block compound key (~32 bits at the default) collapses
     * random collisions by ~2^16; bucket-hash collisions only ADD
     * candidates, which the exact hamming filter removes.

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -19,6 +21,22 @@ object Observability {
   case class Event(event: String, timestamp: String, correlationId: String,
       attrs: Map[String, String])
 
+  /** `s` as a quoted JSON string: backslash, quote and every control
+    * char (< 0x20) escaped — a tab or CR in builder-authored SQL, or a
+    * quote in a Spark call site, would otherwise make a reader's
+    * `json.loads` fail. The one escaper for every JSON file the program
+    * writes (`oracle_sql.json`, `_failed.json`, `pipeline.jsonl`, the
+    * bench's stage lines). */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Pluggable structured-log sink (the reference's `LogStream` protocol,
     * `pipeline.py:26-31`). */
   trait LogStream {
@@ -37,19 +55,13 @@ object Observability {
     java.nio.file.Files.createDirectories(path.getParent)
     private val w = java.nio.file.Files.newBufferedWriter(path,
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    private def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def emit(e: Event): Unit = synchronized {
       val attrs = e.attrs.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
-      w.write(s"""{"event": ${q(e.event)}, "timestamp": ${q(e.timestamp)}, """ +
-        s""""correlation_id": ${q(e.correlationId)}, "attrs": $attrs}\n""")
+        .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+        .mkString("{", ", ", "}")
+      w.write(s"""{"event": ${jsonString(e.event)}, """ +
+        s""""timestamp": ${jsonString(e.timestamp)}, """ +
+        s""""correlation_id": ${jsonString(e.correlationId)}, "attrs": $attrs}\n""")
       w.flush()
     }
     override def close(): Unit = w.close()
@@ -114,6 +126,78 @@ object Observability {
           .getOrElse("n/a"),
         Map("action" -> funcName, "status" -> "error",
           "error" -> String.valueOf(e.getMessage))))
+  }
+
+  /** One completed stage, labelled with the query whose job submitted it.
+    * Byte counts are exact; [[json]] writes them in MB (10^6, the unit of
+    * Bench's `shuffle_mb`) to 6 decimals, so a query's lines sum back to
+    * its bytes. `wallSec` is submission → completion, -1 if either time
+    * is missing. */
+  final case class StageRecord(query: String, stageId: Int, attempt: Int,
+      tasks: Int, wallSec: Double, runSec: Double, gcSec: Double,
+      inputRecords: Long, shuffleReadBytes: Long, shuffleReadRecords: Long,
+      shuffleWriteBytes: Long, shuffleWriteRecords: Long,
+      memorySpillBytes: Long, diskSpillBytes: Long, name: String) {
+    def json: String = {
+      def sec(x: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
+      def mb(b: Long) = String.format(java.util.Locale.ROOT, "%.6f", Double.box(b / 1e6))
+      s"""{"query":${jsonString(query)},"stage":$stageId,"attempt":$attempt,""" +
+        s""""tasks":$tasks,"wall_sec":${sec(wallSec)},"run_sec":${sec(runSec)},""" +
+        s""""gc_sec":${sec(gcSec)},"in_rec":$inputRecords,""" +
+        s""""shuf_read_mb":${mb(shuffleReadBytes)},"shuf_read_rec":$shuffleReadRecords,""" +
+        s""""shuf_write_mb":${mb(shuffleWriteBytes)},"shuf_write_rec":$shuffleWriteRecords,""" +
+        s""""mem_spill_mb":${mb(memorySpillBytes)},"disk_spill_mb":${mb(diskSpillBytes)},""" +
+        s""""name":${jsonString(name)}}"""
+    }
+  }
+
+  /** The stage collector: one [[StageRecord]] per completed stage whose
+    * job ran inside [[StageMetrics.labelled]]. The label travels as a
+    * local property, so it is read from the stage's own submission —
+    * exact however late the async listener bus delivers the completion,
+    * and inherited by the broadcast and subquery threads Spark runs a
+    * query's jobs on. Unlabelled stages (warm-up, hygiene) are not kept.
+    * [[take]] returns and forgets what has completed so far; call it once
+    * the bus has drained. */
+  final class StageMetrics extends SparkListener {
+    private val labels =
+      new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    private val done =
+      new java.util.concurrent.ConcurrentLinkedQueue[StageRecord]()
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(StageMetrics.QueryKey)))
+        .foreach(q => labels.put(e.stageInfo.stageId, q))
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      Option(labels.remove(si.stageId)).filter(_ => m != null).foreach { q =>
+        val wall = (for (c <- si.completionTime; s <- si.submissionTime)
+          yield (c - s) / 1e3).getOrElse(-1.0)
+        done.add(StageRecord(q, si.stageId, si.attemptNumber(), si.numTasks,
+          wall, m.executorRunTime / 1e3, m.jvmGCTime / 1e3,
+          m.inputMetrics.recordsRead,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleReadMetrics.recordsRead,
+          m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten,
+          m.memoryBytesSpilled, m.diskBytesSpilled, si.name))
+      }
+    }
+
+    def take(): Seq[StageRecord] =
+      Iterator.continually(done.poll()).takeWhile(_ != null).toVector
+  }
+
+  object StageMetrics {
+    val QueryKey = "graft.query"
+
+    /** Runs `body` with its Spark jobs' stages labelled `query`. */
+    def labelled[T](spark: SparkSession, query: String)(body: => T): T = {
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty(QueryKey)
+      sc.setLocalProperty(QueryKey, query)
+      try body finally sc.setLocalProperty(QueryKey, prev)
+    }
   }
 
   /** Redaction expression (reference `exceptions.py:78-93`). */

@@ -1,28 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the formatted physical plan of named declared queries — the
   * `.explain("formatted")` feedback loop as a CLI so plan shape can be
   * inspected under any SF / shuffle-width / conf combination without a
-  * REPL. Usage: ExplainQ <sfDir> <name1,name2,...> [mode] */
+  * REPL, in the session profile Bench times ([[graft.Session.suite]]).
+  * Usage: ExplainQ <sfDir> <name1,name2,...> [mode] */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val mode = if (args.length > 2) args(2) else "formatted"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
-      .foreach(d => spark.conf.set(graft.ops.Materialize.ConfKey, d))
+    val spark = graft.Session.build(graft.Session.suite())
     val byName = graft.Queries.all.map(q => q.name -> q).toMap
     names.foreach { name =>
       val q = byName.getOrElse(name, sys.error(s"ExplainQ: unknown query '$name'"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the sf1 heavy-op proof (VERDICT r8 item 4):
@@ -35,14 +35,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, replicasStr) = args
     val replicas = replicasStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.suite())
 
     def reps(df: DataFrame): DataFrame =
       // repartition the (single-file, so single-partition) input BEFORE

@@ -15,8 +15,7 @@ class EntryPointsSpec extends AnyFunSuite {
     "graft/Verify.scala",
     "graft/Bench.scala",
     "graft/tools/ExplainQ.scala",
-    "graft/tools/GenScale.scala",
-    "graft/tools/StageLog.scala")
+    "graft/tools/GenScale.scala")
 
   test("exactly the kept entry points define a main in src/main") {
     val root = Paths.get("src/main/scala")
