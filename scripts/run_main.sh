@@ -13,7 +13,10 @@ CLASSES="$ROOT/target/scala-2.13/classes"
 [[ -d "$CLASSES" ]] || { echo "run_main.sh: no $CLASSES (run sbt compile)" >&2; exit 2; }
 JARS="$(sed -n 's/^unmanagedBase *:= *file("\(.*\)").*/\1/p' "$ROOT/build.sbt")"
 [[ -d "$JARS" ]] || { echo "run_main.sh: build.sbt names no jar directory" >&2; exit 2; }
-CP="$CLASSES:$JARS/*"
+# src/main/resources too: `sbt compile` leaves the service registrations
+# (the "sheet" data source) out of the classes directory, and a provider
+# listed twice still loads once
+CP="$CLASSES:$ROOT/src/main/resources:$JARS/*"
 OPENS=(java.base/java.lang java.base/java.lang.invoke \
   java.base/java.lang.reflect java.base/java.io java.base/java.net \
   java.base/java.nio java.base/java.util java.base/java.util.concurrent \

@@ -121,16 +121,37 @@ object Main {
     }
   }
 
+  /** The fetch knobs shared by run/pozos/health (`__main__.py:80-81,160-165`):
+    * (retries, timeout seconds). */
+  private def fetchKnobs(rest: Array[String]): (Int, Int) = {
+    val retries = arg(rest, "--retries").map(_.toInt).getOrElse(3)
+    val timeoutSec = arg(rest, "--timeout").map(_.toInt).getOrElse(30)
+    if (retries < 1) throw new ConfigError("--retries must be >= 1")
+    if (timeoutSec < 1) throw new ConfigError("--timeout must be >= 1")
+    (retries, timeoutSec)
+  }
+
+  /** The `run` command's pipeline config from its arguments. */
+  def runConfig(rest: Array[String]): RunPipeline.Config = {
+    val threshold = arg(rest, "--mismatch-threshold").map(_.toDouble).getOrElse(0.25)
+    if (threshold < 0) throw new ConfigError("--mismatch-threshold must be >= 0")
+    val (retries, timeoutSec) = fetchKnobs(rest)
+    RunPipeline.Config(
+      workDir = arg(rest, "--work-dir").getOrElse(
+        throw new ConfigError("--work-dir is required")),
+      timeout = timeoutSec,
+      retries = retries,
+      mismatchThreshold = threshold,
+      forcePublish = flag(rest, "--force-publish"),
+      failFast = flag(rest, "--fail-fast"))
+  }
+
   def main(args: Array[String]): Unit = {
     val cmd = args.headOption.getOrElse("help")
     val rest = args.drop(1)
     val fixtureDir = arg(rest, "--fixture-dir")
     val overrides = resolveOverrides(rest)
-    // fetch knobs shared by run/pozos/health (`__main__.py:80-81,160-165`)
-    val retries = arg(rest, "--retries").map(_.toInt).getOrElse(3)
-    val timeoutSec = arg(rest, "--timeout").map(_.toInt).getOrElse(30)
-    if (retries < 1) throw new ConfigError("--retries must be >= 1")
-    if (timeoutSec < 1) throw new ConfigError("--timeout must be >= 1")
+    val (retries, timeoutSec) = fetchKnobs(rest)
     val only = arg(rest, "--only").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // a typo'd --only would otherwise silently yield zero sources and a
     // "successful" run that did nothing (normalizeSources convention)
@@ -151,15 +172,8 @@ object Main {
     def registry() = sources(fixtureDir, overrides, retries, timeoutSec, only, live)
     cmd match {
       case "run" =>
-        val threshold = arg(rest, "--mismatch-threshold").map(_.toDouble).getOrElse(0.25)
-        if (threshold < 0) throw new ConfigError("--mismatch-threshold must be >= 0")
+        val cfg = runConfig(rest)
         val spark = session()
-        val cfg = RunPipeline.Config(
-          workDir = arg(rest, "--work-dir").getOrElse(
-            throw new ConfigError("--work-dir is required")),
-          mismatchThreshold = threshold,
-          forcePublish = flag(rest, "--force-publish"),
-          failFast = flag(rest, "--fail-fast"))
         val log = new graft.ops.Observability.JsonlLogStream(
           java.nio.file.Paths.get(cfg.workDir, "logs", "pipeline.jsonl"))
         val result = try RunPipeline.run(spark, registry(), cfg, log)

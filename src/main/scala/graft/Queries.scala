@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.functions.{PollaFunctions, PollaParsers}
 import graft.ops.{Bpe, Consensus, Dedup, Drift, Ids, Multimodal, Retrieval, Sampling, Similarity, StatePipeline, TextAnalysis}
@@ -4051,18 +4051,22 @@ object Queries {
         |       max_deviation, missing_sources, has_mismatch)
         |ORDER BY categoria""".stripMargin)),
 
+    // The six cases decided on the driver by `StatePipeline.decide`, the
+    // rule `graft.Main run` applies, as a local relation listed in the
+    // oracle's ORDER BY order.
     QDef("polla_decision_matrix",
       (s, _) => {
-        import s.implicits._
-        val cases = Seq(
-          (false, 0.0, 0.0, false), (true, 0.0, 0.0, false),
-          (true, 0.0, 0.0, true), (false, 0.3, 0.0, false),
-          (false, 0.0, 0.2, false), (false, 0.25, 0.10, false))
-          .toDF("unchanged", "mismatch_ratio", "max_deviation", "force")
-        StatePipeline.decideCols(cases.filter(!col("force")))
-          .unionByName(StatePipeline.decideCols(cases.filter(col("force")),
-            forcePublish = true))
-          .orderBy("unchanged", "mismatch_ratio", "max_deviation", "force")
+        val rows = Seq(
+          (false, 0.0, 0.0, false), (false, 0.0, 0.2, false),
+          (false, 0.25, 0.10, false), (false, 0.3, 0.0, false),
+          (true, 0.0, 0.0, false), (true, 0.0, 0.0, true)).map { case (u, ratio, dev, force) =>
+          val (status, publish, _) = StatePipeline.decide(u, ratio, dev, forcePublish = force)
+          org.apache.spark.sql.Row(u, ratio, dev, force, status, publish)
+        }
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType.fromDDL(
+          "unchanged BOOLEAN NOT NULL, mismatch_ratio DOUBLE NOT NULL, " +
+          "max_deviation DOUBLE NOT NULL, force BOOLEAN NOT NULL, " +
+          "decision_status STRING NOT NULL, publish BOOLEAN NOT NULL"))
       },
       Some("""WITH cases(unchanged, mismatch_ratio, max_deviation, force) AS (VALUES
         |  (false, 0.0, 0.0, false), (true, 0.0, 0.0, false),

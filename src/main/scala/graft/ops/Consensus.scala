@@ -114,29 +114,4 @@ object Consensus {
     payloads
       .agg(collect_list(struct(col("source_name"), col("priority"), col("montos"))).as("p"))
       .select(inline(mergeAll(col("p"))))
-
-  /** Reference `resolved` map: one row (categoria, valor) per category. */
-  def resolved(payloads: DataFrame): DataFrame =
-    merge(payloads).select("categoria", "valor").orderBy("categoria")
-
-  /** Decision scalars (`pipeline.py:383-404`): one row with
-    * total_categories, mismatched_categories, mismatch_ratio, max_deviation,
-    * plus confidence given the collected/expected source counts. */
-  def decisionScalars(payloads: DataFrame, expectedSources: Int): DataFrame = {
-    val nCollected = payloads.filter(size(col("montos")) > 0).count()
-    merge(payloads)
-      .agg(
-        count(lit(1)).as("total_categories"),
-        count_if(col("has_mismatch")).as("mismatched_categories"),
-        coalesce(max(col("max_deviation")), lit(0.0)).as("max_deviation"))
-      .withColumn("mismatch_ratio",
-        when(col("total_categories") > 0,
-          col("mismatched_categories") / col("total_categories").cast("double"))
-          .otherwise(lit(0.0)))
-      .withColumn("n_collected", lit(nCollected))
-      .withColumn("confidence",
-        when(col("n_collected") < expectedSources || col("mismatch_ratio") > 0, "degraded")
-          .when(col("n_collected") === 1, "single_source")
-          .otherwise("full"))
-  }
 }

@@ -10,17 +10,8 @@ import org.apache.spark.sql.functions._
   */
 object Profiler {
 
-  /** One row per column: (column, n_rows, n_nulls, n_distinct). */
-  def profile(df: DataFrame): DataFrame =
-    df.columns.toSeq.map { c =>
-      df.agg(
-        count(lit(1)).as("n_rows"),
-        count_if(col(c).isNull).as("n_nulls"),
-        countDistinct(col(c)).as("n_distinct"))
-        .select(lit(c).as("column"), col("n_rows"), col("n_nulls"), col("n_distinct"))
-    }.reduce(_ unionAll _)
-
-  /** Single-scan EXACT variant: all columns profiled in ONE scan.
+  /** One row per column: (column, n_rows, n_nulls, n_distinct), EXACT,
+    * all columns profiled in ONE scan.
     *
     * Stack-then-count rather than N `countDistinct`s in one aggregate:
     * the countDistinct form multiplies every row ×2N through an Expand

@@ -34,8 +34,9 @@ import graft.sources.PozoSource
   * truncate-writes, `pipeline.py:437`). Side-effect ordering preserved
   * from the reference: raw artifacts → read state → write normalized+state
   * (unconditionally, whatever the decision) → report/summary → notify.
-  * [[StatePipeline.decide]] is pure, so deciding before the normalized
-  * write changes no side effect.
+  * The decision policy (derived scalars, change detection, the decision
+  * rule) is [[StatePipeline]]'s, pure driver-side functions, so deciding
+  * before the normalized write changes no side effect.
   */
 object RunPipeline {
 
@@ -118,21 +119,15 @@ object RunPipeline {
       else None
     }
 
-    val mismatchRatio =
-      if (resolved.isEmpty) 0.0
-      else mismatches.count(_.disagreeing.nonEmpty).toDouble / resolved.size
-    val maxDeviation =
-      (0.0 +: mismatches.flatMap(_.max_deviation)).max
-
-    // Confidence scoring (reference `pipeline.py:391-404`).
+    // Derived scalars and confidence (reference `pipeline.py:383-404`).
     val expected = cfg.requestedSources.map {
       case "pozos" => sources.size
       case _ => 1
     }.sum
-    val confidence =
-      if (collected.size < expected || mismatchRatio > 0) "degraded"
-      else if (collected.size == 1) "single_source"
-      else "full"
+    // one per category with disagreeing values (only those set it)
+    val deviations = mismatches.flatMap(_.max_deviation)
+    val (mismatchRatio, maxDeviation, confidence) =
+      StatePipeline.scalars(resolved.size, deviations, collected.size, expected)
 
     // 4. Record build (reference `pipeline.py:406-417`): primary = first
     //    collected (lowest priority).
@@ -164,15 +159,7 @@ object RunPipeline {
     val previous = loadState(spark, statePath.toString)
 
     // 7. Change detection (reference `pipeline.py:257-285`).
-    val unchanged = previous.exists { prev =>
-      prev.sorteo == record.sorteo && prev.fecha == record.fecha && {
-        val shaEq = (for {
-          a <- prev.provenance.pozos.primary.sha256
-          b <- record.provenance.pozos.primary.sha256
-        } yield a == b).getOrElse(false)
-        shaEq || prev.pozos_proximo == record.pozos_proximo
-      }
-    }
+    val unchanged = StatePipeline.unchanged(previous, record)
 
     // 8. Decision (reference `pipeline.py:439-459`).
     val (status, publishFlag, reason) = StatePipeline.decide(
@@ -180,7 +167,7 @@ object RunPipeline {
 
     val generatedAt = cfg.now()
     val decision = Decision(status, confidence, resolved.size.toLong,
-      mismatches.count(_.disagreeing.nonEmpty).toLong, reason)
+      deviations.size.toLong, reason)
     val report = Report(
       RunInfo(cfg.runId, generatedAt, cfg.requestedSources, cfg.timeout,
         cfg.retries, cfg.failFast),
@@ -202,7 +189,7 @@ object RunPipeline {
       Map("decision" -> status, "publish" -> publishFlag.toString,
         "confidence" -> confidence)))
     Observability.metric(spark, log, "mismatched_categories",
-      mismatches.count(_.disagreeing.nonEmpty), now = cfg.now)
+      deviations.size, now = cfg.now)
     Result(summary, report, record, collected)
   }
 

@@ -1,72 +1,59 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.Model.NormalizedRecord
 
-/** Change detection + publish decision.
+/** The EP1 decision policy (SURVEY §3 EP1 steps 6, 8 and 10), the one
+  * implementation every caller reaches: [[RunPipeline.run]],
+  * [[graft.streaming.EventStreams.pozoChangeDetect]] and the declared
+  * query `polla_decision_matrix`. Pure driver-side functions over a run's
+  * few values; a cycle's decision needs no Spark plan.
   *
   * Reference semantics:
   *  - `_compute_unchanged` (`polla_app/pipeline.py:257-285`): a run is
   *    "unchanged" iff the previous state holds a record with the same
   *    (sorteo, fecha) — Python `None == None` is true, so the key equality
   *    is null-safe — and either the provenance sha256 matches (cheap
-  *    short-circuit, PROV-01) or the amounts map is deeply equal.
-  *  - decision rule (`pipeline.py:439-459`): skip if unchanged; quarantine
-  *    if mismatch_ratio > threshold (default 0.25) or max_deviation > 0.10;
-  *    else publish; force_publish turns a skip into publish_forced.
-  *
-  * Spark-first: state is deduplicated to one row per (sorteo, fecha) —
-  * encoding the reference's first-match-wins `break` without scan-order
-  * dependence — then LEFT-joined with null-safe `<=>`. Map equality is
-  * key-order-insensitive (`array_sort(map_entries(...))`) because Spark
-  * maps, unlike Python dicts, carry no defined order.
+  *    short-circuit, PROV-01) or the amounts map is deeply equal
+  *    ([[sameContent]]);
+  *  - derived scalars and confidence (`pipeline.py:383-404`, [[scalars]]);
+  *  - decision rule (`pipeline.py:439-459`, [[decide]]): skip if
+  *    unchanged; quarantine if mismatch_ratio > threshold (default 0.25)
+  *    or max_deviation > 0.10; else publish; force_publish turns a skip
+  *    into publish_forced.
   */
 object StatePipeline {
 
-  private def canonMap(c: String) = array_sort(map_entries(col(c)))
+  /** Same content: both sha256 present and equal, or equal amounts. An
+    * absent sha256 matches nothing, not even another absent one. */
+  def sameContent(prevSha: Option[String], prevAmounts: Map[String, Long],
+      sha: Option[String], amounts: Map[String, Long]): Boolean =
+    prevSha.exists(sha.contains) || prevAmounts == amounts
 
-  /** Left-join current records against previous state; adds `unchanged`.
-    *
-    * Both sides need: sorteo LONG, fecha STRING/DATE, sha256 STRING,
-    * pozos_proximo MAP<STRING,LONG>.
-    */
-  def withUnchanged(current: DataFrame, state: DataFrame): DataFrame = {
-    val prev = state
-      .select(col("sorteo").as("p_sorteo"), col("fecha").as("p_fecha"),
-        col("sha256").as("p_sha256"), col("pozos_proximo").as("p_pozos"))
-      .dropDuplicates("p_sorteo", "p_fecha") // first-match-wins, order-free
-
-    current
-      .join(prev,
-        col("sorteo") <=> col("p_sorteo") && col("fecha") <=> col("p_fecha"),
-        "left")
-      .withColumn("unchanged",
-        coalesce(
-          (col("sha256").isNotNull && col("p_sha256").isNotNull &&
-            col("sha256") === col("p_sha256")) ||
-          (array_sort(map_entries(col("pozos_proximo"))) <=>
-            array_sort(map_entries(col("p_pozos")))),
-          lit(false)))
-      .drop("p_sorteo", "p_fecha", "p_sha256", "p_pozos")
-  }
-
-  /** Change detection against a versioned [[StateTable]] — the large-key-
-    * space form: read latest snapshot, null-safe join, then upsert the new
-    * records as the next version (state written unconditionally, like the
-    * reference's `pipeline.py:436-437`). Returns the flagged frame. */
-  def withUnchangedAgainstTable(spark: org.apache.spark.sql.SparkSession,
-      current: DataFrame, stateRoot: String): DataFrame = {
-    val flagged = StateTable.read(spark, stateRoot) match {
-      case Some(state) => withUnchanged(current, state)
-      case None => current.withColumn("unchanged", lit(false))
+  /** Change detection: some previous record has `record`'s (sorteo, fecha)
+    * and [[sameContent]]. */
+  def unchanged(previous: Seq[NormalizedRecord], record: NormalizedRecord): Boolean =
+    previous.exists { prev =>
+      prev.sorteo == record.sorteo && prev.fecha == record.fecha &&
+        sameContent(prev.provenance.pozos.primary.sha256, prev.pozos_proximo,
+          record.provenance.pozos.primary.sha256, record.pozos_proximo)
     }
-    StateTable.upsert(spark, stateRoot,
-      current.select("sorteo", "fecha", "sha256", "pozos_proximo"),
-      Seq("sorteo", "fecha"))
-    flagged
+
+  /** (mismatch_ratio, max_deviation, confidence) of a consensus over
+    * `categories` categories, where `deviations` holds the max_deviation
+    * of each category with disagreeing values, and `collected` of the
+    * `expected` sources returned a payload. */
+  def scalars(categories: Int, deviations: Seq[Double], collected: Int,
+      expected: Int): (Double, Double, String) = {
+    val mismatchRatio =
+      if (categories == 0) 0.0 else deviations.size.toDouble / categories
+    val confidence =
+      if (collected < expected || mismatchRatio > 0) "degraded"
+      else if (collected == 1) "single_source"
+      else "full"
+    (mismatchRatio, (0.0 +: deviations).max, confidence)
   }
 
-  /** Publish decision as pure values (driver-side gate around sinks). */
+  /** Publish decision as (status, publish, reason). */
   def decide(
       unchanged: Boolean,
       mismatchRatio: Double,
@@ -85,16 +72,4 @@ object StatePipeline {
     if (forcePublish && unchanged) ("publish_forced", true, "force_publish_requested")
     else (status, publish, reason)
   }
-
-  /** Column form of the decision rule, for set-at-a-time pipelines. */
-  def decideCols(df: DataFrame, mismatchThreshold: Double = 0.25,
-      forcePublish: Boolean = false): DataFrame =
-    df.withColumn("decision_status",
-        when(col("unchanged") && lit(forcePublish), "publish_forced")
-          .when(col("unchanged"), "skip")
-          .when(col("mismatch_ratio") > mismatchThreshold ||
-                col("max_deviation") > 0.10, "quarantine")
-          .otherwise("publish"))
-      .withColumn("publish",
-        col("decision_status").isin("publish", "publish_forced"))
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.StatePipeline
 
 /** Structured Streaming surface (SURVEY §2.9).
   *
@@ -254,8 +255,8 @@ object EventStreams {
   }
 
   /** The reference's run-over-run change detection as an arbitrary-stateful
-    * stream: key = (sorteo, fecha); unchanged (same sha or same amounts) →
-    * "skip", else → "publish" and state update
+    * stream: key = (sorteo, fecha); unchanged ([[StatePipeline.sameContent]]:
+    * same sha or same amounts) → "skip", else → "publish" and state update
     * (`flatMapGroupsWithState`, SURVEY §1.1 state-record row). */
   def pozoChangeDetect(updates: Dataset[PozoUpdate]): Dataset[PozoDecision] = {
     import updates.sparkSession.implicits._
@@ -269,8 +270,8 @@ object EventStreams {
           val out = scala.collection.mutable.ListBuffer[PozoDecision]()
           var cur = state.getOption
           for (u <- ordered) {
-            val unchanged = cur.exists(s =>
-              s.sha256 == u.sha256 || s.montos == u.montos)
+            val unchanged = cur.exists(s => StatePipeline.sameContent(
+              Option(s.sha256), s.montos, Option(u.sha256), u.montos))
             out += PozoDecision(sorteo, fecha,
               if (unchanged) "skip" else "publish", !unchanged)
             cur = Some(PozoState(u.sha256, u.montos))

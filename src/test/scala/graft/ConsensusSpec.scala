@@ -38,7 +38,7 @@ class ConsensusSpec extends SparkSpec {
 
   test("total* categories are excluded from voting") {
     val df = payloads(row("a", 0, Map("Loto" -> 10L, "Total estimado" -> 99L)))
-    val cats = Consensus.resolved(df).collect().map(_.getString(0)).toSet
+    val cats = Consensus.merge(df).collect().map(_.getAs[String]("categoria")).toSet
     assert(cats == Set("Loto"))
   }
 
@@ -62,22 +62,29 @@ class ConsensusSpec extends SparkSpec {
     assert(m("Jubilazo") == 0.0)
   }
 
+  /** [[StatePipeline.scalars]] over the merge of `df`, every payload
+    * collected, as `RunPipeline` feeds it. */
+  private def scalarsOf(df: org.apache.spark.sql.DataFrame, expectedSources: Int) = {
+    val cats = Consensus.merge(df).collect()
+    StatePipeline.scalars(cats.length,
+      cats.filter(_.getAs[Boolean]("has_mismatch")).map(_.getAs[Double]("max_deviation")).toSeq,
+      df.count().toInt, expectedSources)
+  }
+
   test("decision scalars + confidence") {
     val agree = payloads(
       row("a", 0, Map("Loto" -> 10L)), row("b", 1, Map("Loto" -> 10L)))
-    val full = Consensus.decisionScalars(agree, expectedSources = 2).collect().head
-    assert(full.getAs[String]("confidence") == "full")
-    assert(full.getAs[Double]("mismatch_ratio") == 0.0)
+    assert(scalarsOf(agree, expectedSources = 2) == ((0.0, 0.0, "full")))
+    assert(scalarsOf(agree, expectedSources = 3)._3 == "degraded")
 
-    val solo = Consensus.decisionScalars(
-      payloads(row("a", 0, Map("Loto" -> 10L))), expectedSources = 1).collect().head
-    assert(solo.getAs[String]("confidence") == "single_source")
+    val solo = payloads(row("a", 0, Map("Loto" -> 10L)))
+    assert(scalarsOf(solo, expectedSources = 1)._3 == "single_source")
 
-    val disagree = Consensus.decisionScalars(payloads(
-      row("a", 0, Map("Loto" -> 10L)), row("b", 1, Map("Loto" -> 12L))),
-      expectedSources = 2).collect().head
-    assert(disagree.getAs[String]("confidence") == "degraded")
-    assert(disagree.getAs[Double]("mismatch_ratio") == 1.0)
+    val disagree = payloads(
+      row("a", 0, Map("Loto" -> 10L, "Recargado" -> 5L)),
+      row("b", 1, Map("Loto" -> 12L, "Recargado" -> 5L)))
+    assert(scalarsOf(disagree, expectedSources = 2) == ((0.5, 0.2, "degraded")))
+    assert(StatePipeline.scalars(0, Seq.empty, 1, 1) == ((0.0, 0.0, "single_source")))
   }
 
   test("disagreeing map lists losing values with voters in vote order") {
@@ -104,34 +111,36 @@ class ConsensusSpec extends SparkSpec {
       "quarantine")
   }
 
+  private def rec(sorteo: Option[Long], fecha: String, sha: Option[String],
+      amounts: Map[String, Long]): Model.NormalizedRecord = {
+    val src = Model.SourceDesc(Some("https://a.cl/"), None, sha, None,
+      estimado = true, sorteo, Some(fecha))
+    Model.NormalizedRecord(sorteo, Some(fecha), Some("https://a.cl/"), "full",
+      Seq.empty, amounts, Model.Provenance(Model.PozosProvenance(src, Seq.empty)))
+  }
+
   test("change detection: sha short-circuit, null-safe keys, map equality") {
-    import spark.implicits._
+    val state = Seq(
+      rec(Some(1L), "2026-01-01", Some("sha-a"), Map("Loto" -> 99L)),  // sha match → unchanged
+      rec(Some(2L), "2026-01-02", Some("sha-y"), Map("Loto" -> 20L)),  // amounts match → unchanged
+      rec(None, "2026-01-03", Some("other"), Map("Loto" -> 30L)),      // null keys match
+      rec(Some(4L), "2026-01-04", Some("sha-q"), Map("Loto" -> 41L)),  // differs → changed
+      rec(Some(5L), "2026-01-05", None, Map("Loto" -> 50L)))           // no sha on either side
     val cur = Seq(
-      (Some(1L), "2026-01-01", "sha-a", Map("Loto" -> 10L)),
-      (Some(2L), "2026-01-02", "sha-x", Map("Loto" -> 20L)),
-      (Option.empty[Long], "2026-01-03", "sha-n", Map("Loto" -> 30L)),
-      (Some(4L), "2026-01-04", "sha-zz", Map("Loto" -> 40L)))
-      .toDF("sorteo", "fecha", "sha256", "pozos_proximo")
-    val st = Seq(
-      (Some(1L), "2026-01-01", "sha-a", Map("Loto" -> 99L)),   // sha match → unchanged
-      (Some(2L), "2026-01-02", "sha-y", Map("Loto" -> 20L)),   // amounts match → unchanged
-      (Option.empty[Long], "2026-01-03", "other", Map("Loto" -> 30L)), // null keys match
-      (Some(4L), "2026-01-04", "sha-q", Map("Loto" -> 41L)))   // differs → changed
-      .toDF("sorteo", "fecha", "sha256", "pozos_proximo")
-    val got = StatePipeline.withUnchanged(cur, st)
-      .select("fecha", "unchanged").collect()
-      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      rec(Some(1L), "2026-01-01", Some("sha-a"), Map("Loto" -> 10L)),
+      rec(Some(2L), "2026-01-02", Some("sha-x"), Map("Loto" -> 20L)),
+      rec(None, "2026-01-03", Some("sha-n"), Map("Loto" -> 30L)),
+      rec(Some(4L), "2026-01-04", Some("sha-zz"), Map("Loto" -> 40L)),
+      rec(Some(5L), "2026-01-05", None, Map("Loto" -> 51L)))
+    val got = cur.map(r => r.fecha.get -> StatePipeline.unchanged(state, r)).toMap
     assert(got == Map(
       "2026-01-01" -> true, "2026-01-02" -> true,
-      "2026-01-03" -> true, "2026-01-04" -> false))
+      "2026-01-03" -> true, "2026-01-04" -> false, "2026-01-05" -> false))
   }
 
   test("no state match → changed") {
-    import spark.implicits._
-    val cur = Seq((Some(9L), "2026-02-01", "s", Map("Loto" -> 1L)))
-      .toDF("sorteo", "fecha", "sha256", "pozos_proximo")
-    val st = Seq((Some(1L), "2026-01-01", "s", Map("Loto" -> 1L)))
-      .toDF("sorteo", "fecha", "sha256", "pozos_proximo")
-    assert(!StatePipeline.withUnchanged(cur, st).collect().head.getAs[Boolean]("unchanged"))
+    val cur = rec(Some(9L), "2026-02-01", Some("s"), Map("Loto" -> 1L))
+    assert(!StatePipeline.unchanged(Seq(rec(Some(1L), "2026-01-01", Some("s"), Map("Loto" -> 1L))), cur))
+    assert(!StatePipeline.unchanged(Seq.empty, cur))
   }
 }

@@ -193,6 +193,20 @@ class PipelineSpec extends SparkSpec {
     assert(depErr.contains("DEPRECATION WARNING") && depErr.contains("pozos-only"))
   }
 
+  test("CLI run: --retries/--timeout reach the config and comparison_report.json") {
+    val dir = tmpDir()
+    val defaults = Main.runConfig(Array("--work-dir", dir))
+    assert((defaults.retries, defaults.timeout) == ((3, 30)))
+    val cfg = Main.runConfig(Array("--work-dir", dir, "--retries", "5", "--timeout", "12"))
+    assert((cfg.retries, cfg.timeout) == ((5, 12)))
+    val r = RunPipeline.run(spark, Seq(stub("a", 0, Map("Loto" -> 1000L))),
+      cfg.copy(runId = "test-run", now = () => "2026-08-12T00:00:00Z"))
+    assert((r.report.run.retries, r.report.run.timeout) == ((5, 12)))
+    val report = Files.readString(Paths.get(dir, "comparison_report.json"))
+    assert(report.contains("\"timeout\":12,\"retries\":5"), report)
+    intercept[ConfigError](Main.runConfig(Array("--work-dir", dir, "--retries", "0")))
+  }
+
   test("publish --summary load is missing-file tolerant, invalid-file strict") {
     assert(Main.loadSummaryDecision("/tmp/graft-no-such-summary.json").isEmpty)
     val p = java.nio.file.Files.createTempFile("graft-summary", ".json")

@@ -1,12 +1,23 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.ops.{Consensus, TextAnalysis}
 import graft.sources.{DistributedFetch, FixtureTransport}
 
 /** Scale operators: consensus winners, distributed fetch, TF-IDF. */
 class ScaleOpsSpec extends SparkSpec {
+
+  /** Reference twin of [[graft.ops.Profiler.profileSingleScan]]: one
+    * aggregate per column, unioned. */
+  private def profilePerColumn(df: DataFrame): DataFrame =
+    df.columns.toSeq.map { c =>
+      df.agg(
+        count(lit(1)).as("n_rows"),
+        count_if(col(c).isNull).as("n_nulls"),
+        countDistinct(col(c)).as("n_distinct"))
+        .select(lit(c).as("column"), col("n_rows"), col("n_nulls"), col("n_distinct"))
+    }.reduce(_ unionAll _)
 
   test("Aggregator consensus winner matches the window formulation") {
     // Loto: 2-1 majority; Recargado: a 1-1 tie the lower source priority
@@ -80,7 +91,7 @@ class ScaleOpsSpec extends SparkSpec {
   test("single-scan profiler agrees with the per-column formulation") {
     import graft.ops.Profiler
     val df = Tables.orders(spark, sf("sf0.001"))
-    val a = Profiler.profile(df).collect()
+    val a = profilePerColumn(df).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val b = Profiler.profileSingleScan(df).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap

@@ -45,24 +45,6 @@ class StateTableSpec extends SparkSpec {
     assert(StateTable.read(spark, root).get.collect().head.getLong(2) == 5L)
   }
 
-  test("table-backed change detection: first run changed, repeat unchanged") {
-    import spark.implicits._
-    import graft.ops.StatePipeline
-    val root = tmp()
-    val run = Seq((Some(5417L), "2026-04-26", "sha1", Map("Loto" -> 100L)))
-      .toDF("sorteo", "fecha", "sha256", "pozos_proximo")
-    val first = StatePipeline.withUnchangedAgainstTable(spark, run, root)
-      .collect().head.getAs[Boolean]("unchanged")
-    assert(!first)
-    val second = StatePipeline.withUnchangedAgainstTable(spark, run, root)
-      .collect().head.getAs[Boolean]("unchanged")
-    assert(second)
-    val changed = Seq((Some(5417L), "2026-04-26", "sha2", Map("Loto" -> 999L)))
-      .toDF("sorteo", "fecha", "sha256", "pozos_proximo")
-    assert(!StatePipeline.withUnchangedAgainstTable(spark, changed, root)
-      .collect().head.getAs[Boolean]("unchanged"))
-  }
-
   test("bucketed upsert: untouched bucket files are byte-identical across versions") {
     import spark.implicits._
     val root = tmp()

@@ -229,6 +229,24 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("pozo change detection stream: no sha256 on either update → amounts decide") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[PozoUpdate]
+    val q = EventStreams.pozoChangeDetect(input.toDS())
+      .writeStream.format("memory").queryName("pozo_decisions_nosha")
+      .outputMode("append").start()
+    try {
+      input.addData(
+        PozoUpdate(5417L, "2026-04-26", null, Map("Loto" -> 100L), ts(0)),
+        PozoUpdate(5417L, "2026-04-26", null, Map("Loto" -> 999L), ts(1)))
+      q.processAllAvailable()
+      val statuses = spark.table("pozo_decisions_nosha").as[PozoDecision]
+        .collect().map(_.status).toSeq
+      assert(statuses == Seq("publish", "publish"))
+    } finally q.stop()
+  }
+
   test("session windows group events by inactivity gap (batch mode)") {
     import spark.implicits._
     // session_window works identically on batch frames — verify grouping
