@@ -1,5 +1,5 @@
 package graft
-import graft.ops.Observability.{StageMetrics, StageRecord}
+import graft.ops.Observability.{QueryMetrics, StageRecord, labelled}
 
 /** Benchmark driver: times every declared query at the SF directory in
   * `SPARK_GRAFT_SF_DIR`. Prints ONE compact JSON line sized to fit the
@@ -45,11 +45,12 @@ import graft.ops.Observability.{StageMetrics, StageRecord}
   * Per-stage attribution: every completed stage of a timed query is
   * written as one JSON line (query, stage, attempt, tasks, wall/run/GC
   * seconds, input records, shuffle read/write MB and records, memory/disk
-  * spill MB, the stage's call-site name) to `<bench_out>_stages.jsonl`
-  * beside the full artifact, from the kept pass. A query's
-  * `shuf_write_mb` sum over its lines, divided by the runs, is its
-  * `shuffle_mb`. The stage stream says which exchange/sort/agg owns the
-  * wall and the spill without a per-operator harness.
+  * spill MB, the SQL execution id, the stage's call-site name) to
+  * `<bench_out>_stages.jsonl` beside the full artifact, from the kept
+  * pass. A query's `shuf_write_mb` sum over its lines, divided by the
+  * runs, is its `shuffle_mb`. The stage stream says which
+  * exchange/sort/agg owns the wall and the spill without a per-operator
+  * harness.
   *
   * `SPARK_GRAFT_ONLY=name1,name2` restricts the run (local iteration);
   * `SPARK_GRAFT_RUNS=n` overrides the per-query run count (default 2) —
@@ -118,12 +119,11 @@ object Bench {
     spark.read.parquet(s"$sfDir/documents.parquet").count()
     spark.read.parquet(s"$sfDir/embeddings.parquet").count()
     // Stage accounting (shuffle_mb and the stage lines): each query runs
-    // labelled, so its stages are its own. Stage-completed events are
-    // delivered async; a short drain pause after each query lets the bus
-    // catch up before its stages are taken.
-    val stageMetrics = new StageMetrics
-    spark.sparkContext.addSparkListener(stageMetrics)
-    def drainListeners(): Unit = Thread.sleep(120)
+    // under its name as the correlation id, so its stages are its own.
+    // Stage-completed events are delivered async; draining the listener
+    // bus after each query delivers its stages before they are taken.
+    val metrics = new QueryMetrics
+    spark.sparkContext.addSparkListener(metrics)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .filterNot { case (name, _) => skip.contains(name) }
@@ -168,11 +168,9 @@ object Bench {
       var loadMax = load()
       var stealMax = 0.0
       val rs = selected.map { case (name, fn) =>
-        drainListeners()
-        stageMetrics.take() // a previous query's stages that landed late
         val cpu0 = cpuStat()
         val tq0 = System.nanoTime()
-        val times = StageMetrics.labelled(spark, name) {
+        val times = labelled(spark, name) {
           (1 to runs).map { _ =>
             val t0 = System.nanoTime()
             try { runAction(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
@@ -188,18 +186,20 @@ object Bench {
             }
           }
         }
-        drainListeners()
+        QueryMetrics.drain(spark)
         loadMax = math.max(loadMax, load())
         // steal/iowait as a % of this query's total cpu-seconds (wall ×
         // ncpus): the denominator covers all runs of the query plus the
-        // drain pause — slight underestimate per run, stable to compare
+        // bus drain — slight underestimate per run, stable to compare
         val wallQ = (System.nanoTime() - tq0) / 1e9
         val cpu1 = cpuStat()
         val stealPct = tools.ProcStat.pct(cpu0, cpu1, wallQ, ncpus, _._1)
         val iowaitPct = tools.ProcStat.pct(cpu0, cpu1, wallQ, ncpus, _._2)
         // a missing sample (-1 sentinel) must not drive the dirt gate
         if (stealPct >= 0) stealMax = math.max(stealMax, stealPct)
-        val stages = stageMetrics.take()
+        // a stage an earlier query left running (an AQE stage it no
+        // longer needed) completes under that query's id: not this one's
+        val stages = metrics.take().filter(_.query == name)
         val shuffleMb = stages.map(_.shuffleWriteBytes).sum / 1e6 / runs
         // per-query hygiene (r10 verdict item 4): a 139-query pass in ONE
         // JVM accumulates session state — persisted frames a query left

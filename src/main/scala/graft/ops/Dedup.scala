@@ -470,37 +470,31 @@ object Dedup {
     * over the edge list — O(|E|) work, no driver-side graph.
     * Checkpointing after every round truncates lineage, so the per-round
     * plan is identical in shape (codegen cache hits from round 2 on) and
-    * constant in size. Default is `localCheckpoint()` (executor-memory
-    * blocks — fine single-node and fastest); pass `checkpointDir` to use
-    * RELIABLE `checkpoint()` to that path instead, which is what a real
-    * cluster run wants: local checkpoint blocks die with an executor,
-    * and losing one mid-algorithm kills the job, so at 1000 executors
-    * the reliable form is the only safe one. Deterministic: min is
-    * order-independent.
+    * constant in size. Checkpoints follow [[Materialize]]: executor-memory
+    * `localCheckpoint()` by default (fine single-node and fastest), and
+    * RELIABLE `checkpoint()` when the `graft.checkpoint.dir` conf names
+    * a directory, which is what a real cluster run wants: local
+    * checkpoint blocks die with an executor, and losing one
+    * mid-algorithm kills the job, so at 1000 executors the reliable form
+    * is the only safe one. Deterministic: min is order-independent.
     *
     * Throws if `maxIter` rounds pass without convergence — partially
     * propagated labels would silently mis-cluster downstream. 50 rounds
     * covers any graph a 100 TB corpus can produce (2^50 nodes).
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame =
-    ccWithRounds(edges, maxIter, checkpointDir)._1
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    ccWithRounds(edges, maxIter)._1
 
   /** [[connectedComponents]] plus the number of rounds it took — lets the
     * test suite pin the O(log n) convergence bound. */
-  private[graft] def ccWithRounds(edges: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    // checkpoint strategy: reliable-storage checkpoint when a dir is
-    // given (cluster path) or the graft.checkpoint.dir conf is set,
-    // executor-local blocks otherwise
-    val materialize = Materialize.fn(edges.sparkSession, checkpointDir)
+  private[graft] def ccWithRounds(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     // materialize the (possibly expensive) edge plan ONCE, before the
     // union doubles it and the rounds rescan it
-    val e0 = materialize(
+    val e0 = Materialize(
       edges.select(col("u"), col("v")).filter(col("u") =!= col("v")))
-    val sym = materialize(
+    val sym = Materialize(
       e0.union(e0.select(col("v").as("u"), col("u").as("v"))))
-    var labels = materialize(sym.groupBy("u").agg(min("v").as("m"))
+    var labels = Materialize(sym.groupBy("u").agg(min("v").as("m"))
       .select(col("u").as("node"), least(col("u"), col("m")).as("label")))
     var it = 0
     var done = false
@@ -521,7 +515,7 @@ object Dedup {
           least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
           (least(col("label"), coalesce(col("nl"), col("label"))) < col("prev"))
             .as("chg"))
-      val next = materialize(next0)
+      val next = Materialize(next0)
       done = next.filter(col("chg")).isEmpty
       labels = next.select("node", "label")
       it += 1

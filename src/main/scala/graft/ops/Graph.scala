@@ -26,11 +26,14 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Spark conf that overrides [[pageRank]]'s `gcNudgeNodes` parameter —
-    * the no-code-change switch for operators sharing a driver (see the
-    * nudge-gate comment inside pageRank). Same conf-over-parameter
-    * pattern as [[Materialize.ConfKey]]. */
+  /** Spark conf that overrides [[pageRank]]'s GC-nudge node threshold
+    * ([[GcNudgeNodes]]) — the no-code-change switch for operators sharing
+    * a driver (see the nudge-gate comment inside pageRank). */
   val GcNudgeConfKey = "graft.pagerank.gcNudgeNodes"
+
+  /** The node count above which [[pageRank]] runs its shuffle-lifetime
+    * discipline, unless [[GcNudgeConfKey]] overrides it. */
+  private val GcNudgeNodes = 24000000L
 
   /** PageRank over the UNDIRECTED graph induced by `edges` (symmetrized,
     * self-loops dropped, duplicate edges collapsed). Every node in the
@@ -53,7 +56,7 @@ object Graph {
     * r11): every iteration's contribution exchange stays referenced by
     * the lazy plan until the final action, so a 5-iteration run over a
     * 1.2 B-edge list accumulated 43 GB of live shuffle files and died
-    * on disk. On a BIG graph (nodes > `gcNudgeNodes`) the cadence is
+    * on disk. On a BIG graph (nodes > [[GcNudgeNodes]]) the cadence is
     * clamped to every 2 iterations and each materialization is followed
     * by a driver-GC nudge: lineage truncation makes the superseded
     * iterations' ShuffleDependencies unreachable, and ContextCleaner
@@ -62,17 +65,14 @@ object Graph {
     * ranks frame is O(nodes), so the extra materializations are noise
     * next to any one edge pass; at small SF neither the clamp nor the
     * GC runs (measured +2 s of pure GC wall on the 0.6 s sf0.1 query).
-    * `checkpointDir` selects reliable `checkpoint()` over executor-local
-    * blocks (`localCheckpoint`): local blocks die with an executor, and
-    * on a 1000-executor run losing one mid-power-iteration kills the
-    * job. */
+    * Checkpoints follow [[Materialize]]: the `graft.checkpoint.dir` conf
+    * selects reliable `checkpoint()` over executor-local blocks
+    * (`localCheckpoint`): local blocks die with an executor, and on a
+    * 1000-executor run losing one mid-power-iteration kills the job. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, damping: Double = 0.85,
-      broadcastNodes: Long = 1000000L, checkpointEvery: Int = 8,
-      gcNudgeNodes: Long = 24000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      broadcastNodes: Long = 1000000L, checkpointEvery: Int = 8): DataFrame = {
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val materialize = Materialize.fn(edges.sparkSession, checkpointDir)
     // materialized once: every iteration joins against these, and the
     // lazy lineage would re-derive the upstream edge join per iteration
     // (the op is already eager — n below is an action — so this adds no
@@ -105,7 +105,7 @@ object Graph {
     // extra exchange. Rows with equal (src, dst) are identical 2-column
     // rows, so keep-first is deterministic whatever physical row wins.
     val dedupW = Window.partitionBy("src").orderBy("dst")
-    val und = materialize(edges
+    val und = Materialize(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionAll(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .filter(col("src") =!= col("dst"))
@@ -113,7 +113,7 @@ object Graph {
       .withColumn("_prev", lag("dst", 1).over(dedupW))
       .filter(col("_prev").isNull || col("_prev") =!= col("dst"))
       .drop("_prev"))
-    val degs = materialize(und.groupBy("src").agg(count(lit(1)).as("deg"))
+    val degs = Materialize(und.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg")))
     val n = degs.count() // driver scalar
     // an empty graph (a pushed-down filter or pruned partition can
@@ -165,22 +165,22 @@ object Graph {
     // in a shared driver serving concurrent queries the stop-the-world
     // pause stalls unrelated work, and the call site may not be editable
     // (a declared query, a notebook). The spark conf overrides the
-    // parameter without code changes; set it to Long.MaxValue (e.g.
+    // threshold without code changes; set it to Long.MaxValue (e.g.
     // spark.conf.set(Graph.GcNudgeConfKey, "9223372036854775807")) to
     // disable the nudges entirely, or lower it to force the disk-scale
     // discipline on a smaller graph.
     // A malformed conf value must not turn a tuning knob into a
-    // query-crashing input: fall back to the parameter with a warning.
+    // query-crashing input: fall back to the default with a warning.
     val nudgeLimit = edges.sparkSession.conf
       .getOption(Graph.GcNudgeConfKey)
       .flatMap { raw =>
         val parsed = raw.trim.toLongOption
         if (parsed.isEmpty) org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"${Graph.GcNudgeConfKey}='$raw' is not a long; " +
-            s"using default $gcNudgeNodes")
+            s"using default $GcNudgeNodes")
         parsed
       }
-      .getOrElse(gcNudgeNodes)
+      .getOrElse(GcNudgeNodes)
     val big = n > nudgeLimit
     val ckptEvery = if (big) math.min(checkpointEvery, 2) else checkpointEvery
     if (big) System.gc() // release the und/degs build shuffles' files
@@ -203,7 +203,7 @@ object Graph {
       // mid-query (see the checkpointEvery Scaladoc) — ContextCleaner
       // acts on reference collection, which needs a driver GC to happen.
       if (i % ckptEvery == 0 && i < iters) {
-        ranks = materialize(ranks)
+        ranks = Materialize(ranks)
         if (big) System.gc()
       }
     }

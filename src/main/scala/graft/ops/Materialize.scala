@@ -16,9 +16,6 @@ import org.apache.spark.sql.DataFrame
   * signature churn:
   *
   * {{{ spark.conf.set(Materialize.ConfKey, "hdfs://…/graft-ckpt") }}}
-  *
-  * Ops that expose an explicit `checkpointDir` parameter (CC, PageRank)
-  * honor the parameter first and fall back to this conf.
   */
 object Materialize {
   /** Runtime-conf key: when set (non-empty), reliable checkpoints go to
@@ -34,15 +31,4 @@ object Materialize {
       case None => df.localCheckpoint()
     }
   }
-
-  /** The materializer an op with an explicit `checkpointDir` parameter
-    * should use: the parameter wins, then the session conf, then local. */
-  def fn(spark: org.apache.spark.sql.SparkSession,
-      checkpointDir: Option[String]): DataFrame => DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        spark.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => apply
-    }
 }

@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
-  SparkListenerStageSubmitted}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.GraftError
 
@@ -67,15 +68,24 @@ object Observability {
     override def close(): Unit = w.close()
   }
 
-  private val CorrelationKey = "graft.run_id"
+  /** The correlation id's local property (reference `ContextVar`,
+    * `obs.py:20-28` → `setLocalProperty`): the one label every span,
+    * metric, job and stage of a run carries. */
+  val LabelKey = "graft.run_id"
 
-  /** Set the correlation id on the Spark context (reference `ContextVar`,
-    * `obs.py:20-28` → `setLocalProperty`, visible to listeners + tasks). */
-  def setCorrelationId(spark: SparkSession, runId: String): Unit =
-    spark.sparkContext.setLocalProperty(CorrelationKey, runId)
+  /** Runs `body` under the correlation id `id`, restoring the previous one
+    * after. A thread-local Spark property, so listeners see it on every
+    * job and stage `body` submits, the broadcast and subquery threads
+    * Spark runs them on included. */
+  def labelled[T](spark: SparkSession, id: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(LabelKey)
+    sc.setLocalProperty(LabelKey, id)
+    try body finally sc.setLocalProperty(LabelKey, prev)
+  }
 
   def correlationId(spark: SparkSession): String =
-    Option(spark.sparkContext.getLocalProperty(CorrelationKey)).getOrElse("n/a")
+    Option(spark.sparkContext.getLocalProperty(LabelKey)).getOrElse("n/a")
 
   /** span(name) { ... } → span_start/span_end events with duration_ms
     * (reference `obs.py:67-91`). */
@@ -111,33 +121,20 @@ object Observability {
     log.emit(Event("metric", now(), correlationId(spark),
       tags + ("name" -> name, "kind" -> kind, "value" -> value.toString)))
 
-  /** Listener that turns every completed action into a structured event
-    * with wall-clock duration — the engine-level span stream. */
-  final class ActionListener(log: LogStream) extends QueryExecutionListener {
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      log.emit(Event("query_end", java.time.Instant.now().toString,
-        Option(qe.sparkSession.sparkContext.getLocalProperty(CorrelationKey))
-          .getOrElse("n/a"),
-        Map("action" -> funcName, "status" -> "ok",
-          "duration_ms" -> (durationNs / 1e6).round.toString)))
-    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-      log.emit(Event("query_end", java.time.Instant.now().toString,
-        Option(qe.sparkSession.sparkContext.getLocalProperty(CorrelationKey))
-          .getOrElse("n/a"),
-        Map("action" -> funcName, "status" -> "error",
-          "error" -> String.valueOf(e.getMessage))))
-  }
-
-  /** One completed stage, labelled with the query whose job submitted it.
-    * Byte counts are exact; [[json]] writes them in MB (10^6, the unit of
-    * Bench's `shuffle_mb`) to 6 decimals, so a query's lines sum back to
-    * its bytes. `wallSec` is submission → completion, -1 if either time
-    * is missing. */
+  /** One completed stage, labelled with the correlation id of the job
+    * that submitted it, and with that job's SQL execution id
+    * (`spark.sql.execution.id`; None for a job outside one), which ties
+    * a stage named after an AQE or broadcast thread's call site to its
+    * query. Byte counts are exact; [[json]] writes them in MB (10^6, the
+    * unit of Bench's `shuffle_mb`) to 6 decimals, so a query's lines sum
+    * back to its bytes. `wallSec` is submission → completion, -1 if
+    * either time is missing. */
   final case class StageRecord(query: String, stageId: Int, attempt: Int,
       tasks: Int, wallSec: Double, runSec: Double, gcSec: Double,
       inputRecords: Long, shuffleReadBytes: Long, shuffleReadRecords: Long,
       shuffleWriteBytes: Long, shuffleWriteRecords: Long,
-      memorySpillBytes: Long, diskSpillBytes: Long, name: String) {
+      memorySpillBytes: Long, diskSpillBytes: Long, sqlExec: Option[Long],
+      name: String) {
     def json: String = {
       def sec(x: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
       def mb(b: Long) = String.format(java.util.Locale.ROOT, "%.6f", Double.box(b / 1e6))
@@ -147,32 +144,37 @@ object Observability {
         s""""shuf_read_mb":${mb(shuffleReadBytes)},"shuf_read_rec":$shuffleReadRecords,""" +
         s""""shuf_write_mb":${mb(shuffleWriteBytes)},"shuf_write_rec":$shuffleWriteRecords,""" +
         s""""mem_spill_mb":${mb(memorySpillBytes)},"disk_spill_mb":${mb(diskSpillBytes)},""" +
-        s""""name":${jsonString(name)}}"""
+        s""""sql_exec":${sqlExec.getOrElse("null")},"name":${jsonString(name)}}"""
     }
   }
 
-  /** The stage collector: one [[StageRecord]] per completed stage whose
-    * job ran inside [[StageMetrics.labelled]]. The label travels as a
-    * local property, so it is read from the stage's own submission —
-    * exact however late the async listener bus delivers the completion,
-    * and inherited by the broadcast and subquery threads Spark runs a
-    * query's jobs on. Unlabelled stages (warm-up, hygiene) are not kept.
-    * [[take]] returns and forgets what has completed so far; call it once
-    * the bus has drained. */
-  final class StageMetrics extends SparkListener {
-    private val labels =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    private val done =
-      new java.util.concurrent.ConcurrentLinkedQueue[StageRecord]()
+  /** The one metrics collector: per correlation id ([[labelled]]), the
+    * Spark jobs it started and one [[StageRecord]] per stage it
+    * completed. Both are read from the submission's own properties, so
+    * they are exact however late the async listener bus delivers an
+    * event. Unlabelled jobs and stages (warm-up, hygiene) are not kept.
+    * Read after [[QueryMetrics.drain]]: [[take]] returns and forgets the
+    * stages completed so far, [[jobs]] a label's job count. */
+  final class QueryMetrics extends SparkListener {
+    private val jobCounts = new ConcurrentHashMap[String, AtomicInteger]()
+    private val submitted = new ConcurrentHashMap[Int, (String, Option[Long])]()
+    private val done = new ConcurrentLinkedQueue[StageRecord]()
+
+    private def property(p: java.util.Properties, key: String): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(key)))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      property(e.properties, LabelKey).foreach(l =>
+        jobCounts.computeIfAbsent(l, _ => new AtomicInteger()).incrementAndGet())
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(StageMetrics.QueryKey)))
-        .foreach(q => labels.put(e.stageInfo.stageId, q))
+      property(e.properties, LabelKey).foreach(l => submitted.put(e.stageInfo.stageId,
+        (l, property(e.properties, SQLExecution.EXECUTION_ID_KEY).flatMap(_.toLongOption))))
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val si = e.stageInfo
       val m = si.taskMetrics
-      Option(labels.remove(si.stageId)).filter(_ => m != null).foreach { q =>
+      Option(submitted.remove(si.stageId)).filter(_ => m != null).foreach { case (q, exec) =>
         val wall = (for (c <- si.completionTime; s <- si.submissionTime)
           yield (c - s) / 1e3).getOrElse(-1.0)
         done.add(StageRecord(q, si.stageId, si.attemptNumber(), si.numTasks,
@@ -180,24 +182,22 @@ object Observability {
           m.inputMetrics.recordsRead,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleReadMetrics.recordsRead,
           m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten,
-          m.memoryBytesSpilled, m.diskBytesSpilled, si.name))
+          m.memoryBytesSpilled, m.diskBytesSpilled, exec, si.name))
       }
     }
+
+    def jobs(label: String): Int = Option(jobCounts.get(label)).fold(0)(_.get)
 
     def take(): Seq[StageRecord] =
       Iterator.continually(done.poll()).takeWhile(_ != null).toVector
   }
 
-  object StageMetrics {
-    val QueryKey = "graft.query"
-
-    /** Runs `body` with its Spark jobs' stages labelled `query`. */
-    def labelled[T](spark: SparkSession, query: String)(body: => T): T = {
-      val sc = spark.sparkContext
-      val prev = sc.getLocalProperty(QueryKey)
-      sc.setLocalProperty(QueryKey, query)
-      try body finally sc.setLocalProperty(QueryKey, prev)
-    }
+  object QueryMetrics {
+    /** Returns once every listener event posted so far has been
+      * delivered: a count read after it includes every job and stage
+      * that completed before the call. */
+    def drain(spark: SparkSession): Unit =
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
   }
 
   /** Redaction expression (reference `exceptions.py:78-93`). */

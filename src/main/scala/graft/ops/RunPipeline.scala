@@ -68,9 +68,13 @@ object RunPipeline {
     mapped.distinct
   }
 
+  /** One cycle, its jobs and spans under the correlation id `cfg.runId`. */
   def run(spark: SparkSession, sources: Seq[PozoSource], cfg: Config,
-      log: Observability.LogStream = new Observability.BufferingLogStream): Result = {
-    Observability.setCorrelationId(spark, cfg.runId)
+      log: Observability.LogStream = new Observability.BufferingLogStream): Result =
+    Observability.labelled(spark, cfg.runId)(cycle(spark, sources, cfg, log))
+
+  private def cycle(spark: SparkSession, sources: Seq[PozoSource], cfg: Config,
+      log: Observability.LogStream): Result = {
     log.emit(Observability.Event("pipeline_start", cfg.now(), cfg.runId,
       Map("sources" -> cfg.requestedSources.mkString(","))))
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.functions.PollaParsers
+import graft.ParseError
 
 /** Distributed polite fetching — SURVEY §2.1's `fetch_html` mapped onto
   * executors without losing the per-host politeness contract.
@@ -11,8 +11,10 @@ import graft.functions.PollaParsers
   * per-host rate limiter is honest no matter how many executors run: on a
   * 1000-executor cluster, 1000 distinct hosts fetch in parallel while each
   * individual host still sees `minIntervalMs` spacing, robots gating, and
-  * 429 backoff. Failures are data (an `error` column), not exceptions — a
-  * bad page cannot kill a million-URL crawl.
+  * 429 backoff. Pages are parsed by [[HtmlPozoSource.extract]].
+  * Failures are data (an `error` column), not exceptions — a bad page
+  * cannot kill a million-URL crawl; a page that was fetched but failed
+  * to parse keeps its `sha256`.
   */
 object DistributedFetch {
 
@@ -53,27 +55,18 @@ object DistributedFetch {
         val fetcher = new Fetcher(transport, retries = retries,
           backoffFactor = backoffFactor, rateLimiter = Some(limiter))
         it.map { t =>
+          def failed(e: Exception, sha256: Option[String]) =
+            FetchOutcome(t.source_name, t.priority, t.url, ok = false,
+              Some(String.valueOf(e.getMessage)), sha256, Map.empty, None, None)
           try {
             val res = fetcher.fetch(t.url, ua)
-            val text = Html.toText(res.html)
-            PollaParsers.extractAmounts(text, t.allow_total, t.absent_as_zero) match {
-              case Right(amounts) if amounts.nonEmpty && amounts.values.sum != 0L =>
-                val (sorteo, fecha) = PollaParsers.extractProximoInfo(text)
-                FetchOutcome(t.source_name, t.priority, t.url, ok = true,
-                  None, Some(res.sha256), amounts, sorteo, fecha)
-              case Right(_) =>
-                FetchOutcome(t.source_name, t.priority, t.url, ok = false,
-                  Some("no valid pozo amounts"), Some(res.sha256),
-                  Map.empty, None, None)
-              case Left(e) =>
-                FetchOutcome(t.source_name, t.priority, t.url, ok = false,
-                  Some(e), Some(res.sha256), Map.empty, None, None)
-            }
-          } catch {
-            case e: Exception =>
-              FetchOutcome(t.source_name, t.priority, t.url, ok = false,
-                Some(String.valueOf(e.getMessage)), None, Map.empty, None, None)
-          }
+            try {
+              val (amounts, sorteo, fecha) = HtmlPozoSource.extract(res.html, t.url,
+                t.allow_total, t.absent_as_zero)
+              FetchOutcome(t.source_name, t.priority, t.url, ok = true,
+                None, Some(res.sha256), amounts, sorteo, fecha)
+            } catch { case e: ParseError => failed(e, Some(res.sha256)) }
+          } catch { case e: Exception => failed(e, None) }
         }
       }
   }

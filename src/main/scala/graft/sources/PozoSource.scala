@@ -30,21 +30,32 @@ final class HtmlPozoSource(
 
   def fetch(): SourcePayload = {
     val res = fetcher.fetch(url, ua)
-    val text = Html.toText(res.html)
-    val amounts = PollaParsers.extractAmounts(text, allowTotal, absentAsZero) match {
-      case Right(a) => a
-      case Left(e) => throw new ParseError(e, Map("url" -> url))
-    }
-    // Zero-amount guard (reference `sources/pozos.py:242-246`).
-    if (amounts.isEmpty || amounts.values.sum == 0L)
-      throw new ParseError(s"No valid pozo amounts found in source content from $url",
-        Map("url" -> url, "text_snippet" -> text.take(200)))
-    val (sorteo, fecha) = PollaParsers.extractProximoInfo(text)
+    val (amounts, sorteo, fecha) = HtmlPozoSource.extract(res.html, url, allowTotal, absentAsZero)
     SourcePayload(
       source_name = name, priority = priority, fuente = url,
       fetched_at = java.time.Instant.ofEpochMilli(res.fetchedAtMs).toString,
       sha256 = Some(res.sha256), estimado = true, montos = amounts,
       user_agent = Some(ua), sorteo = sorteo, fecha = fecha)
+  }
+}
+
+object HtmlPozoSource {
+  /** A page's pozo amounts and its próximo sorteo and fecha: the page is
+    * flattened to text, the amounts extracted, and a page whose amounts
+    * are missing or all zero is refused (reference
+    * `sources/pozos.py:242-246`). Throws [[ParseError]]. */
+  def extract(html: String, url: String, allowTotal: Boolean,
+      absentAsZero: Boolean): (Map[String, Long], Option[Long], Option[String]) = {
+    val text = Html.toText(html)
+    val amounts = PollaParsers.extractAmounts(text, allowTotal, absentAsZero) match {
+      case Right(a) => a
+      case Left(e) => throw new ParseError(e, Map("url" -> url))
+    }
+    if (amounts.isEmpty || amounts.values.sum == 0L)
+      throw new ParseError(s"No valid pozo amounts found in source content from $url",
+        Map("url" -> url, "text_snippet" -> text.take(200)))
+    val (sorteo, fecha) = PollaParsers.extractProximoInfo(text)
+    (amounts, sorteo, fecha)
   }
 }
 

@@ -2,10 +2,10 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
-import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import graft.ops.Observability.QueryMetrics
 
 /** Which analyzer rules ran in the QueryExecutions a block runs: a
   * `QueryExecutionListener` on the session gathers each action's
@@ -36,7 +36,7 @@ object AnalyzerRules {
     s.listenerManager.register(listener)
     val out = try {
       val r = body
-      TestListenerBus.drain(s.sparkContext)
+      QueryMetrics.drain(s)
       r
     } finally s.listenerManager.unregister(listener)
     val qes = seen.asScala.toSeq

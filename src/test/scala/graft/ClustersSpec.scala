@@ -32,8 +32,10 @@ class ClustersSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (21L, 20L))
       .toDF("u", "v")
-    val got = Dedup.connectedComponents(edges, checkpointDir = Some(dir))
+    spark.conf.set(graft.ops.Materialize.ConfKey, dir)
+    val got = try Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally spark.conf.unset(graft.ops.Materialize.ConfKey)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
     // reliable (not local) checkpointing actually wrote RDD blocks there

@@ -47,9 +47,10 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(mass - 1.0) < 1e-3, s"rank mass drifted: $mass")
     // reliable-checkpoint path: same result through a checkpoint dir
     val dir = java.nio.file.Files.createTempDirectory("graft-pr-ckpt").toString
-    val viaDir = Graph.pageRank(edges, "src", "dst", iters = 25,
-      checkpointDir = Some(dir)).collect()
+    spark.conf.set(graft.ops.Materialize.ConfKey, dir)
+    val viaDir = try Graph.pageRank(edges, "src", "dst", iters = 25).collect()
       .map(r => r.getString(0) -> r.getDouble(2)).toMap
+    finally spark.conf.unset(graft.ops.Materialize.ConfKey)
     val viaLocal = deep.collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     assert(viaDir == viaLocal, "reliable and local checkpoints must agree")
   }

@@ -1,36 +1,34 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.ops.Observability.{QueryMetrics, labelled}
 
-/** Counts the Spark jobs a block starts: the block runs under a tag held in
-  * a thread-local Spark property, and a listener counts the jobs that carry
-  * it. Each spec has its own property key, so specs never share counts. */
+/** Counts the Spark jobs a block starts with the program's collector,
+  * [[QueryMetrics]]: the block runs under a correlation id, and the
+  * collector counts the jobs that carry it. */
 trait JobCounting extends SparkSpec {
 
-  private val tagKey = s"graft.test.jobs.${getClass.getName}"
-  private val jobsByTag = new ConcurrentHashMap[String, AtomicInteger]()
-  private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(t =>
-        jobsByTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet())
-  }
+  private val metrics = new QueryMetrics
+  private val calls = new AtomicInteger()
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(metrics)
   }
   override def afterAll(): Unit =
-    try spark.sparkContext.removeSparkListener(listener) finally super.afterAll()
+    try spark.sparkContext.removeSparkListener(metrics) finally super.afterAll()
 
-  /** The body's result and the number of Spark jobs it started. */
-  protected def jobs[T](tag: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setLocalProperty(tagKey, tag)
-    val out = try body finally sc.setLocalProperty(tagKey, null)
-    TestListenerBus.drain(sc)
-    (out, Option(jobsByTag.get(tag)).map(_.get).getOrElse(0))
+  /** The body's result and the number of Spark jobs it started, under an
+    * id of this call's own. */
+  protected def jobs[T](tag: String)(body: => T): (T, Int) =
+    jobsUnder(s"${getClass.getName}/$tag/${calls.incrementAndGet()}")(body)
+
+  /** The body's result and the number of Spark jobs started under the
+    * correlation id `id`, which the body runs under: for a body that sets
+    * its own, as `RunPipeline.run` sets its run id, pass that id. */
+  protected def jobsUnder[T](id: String)(body: => T): (T, Int) = {
+    val out = labelled(spark, id)(body)
+    QueryMetrics.drain(spark)
+    (out, metrics.jobs(id))
   }
 }

@@ -42,8 +42,9 @@ class PipelineJobBudgetSpec extends JobCounting {
   test("warm EP1 cycle, its sheet write and its dry-run diff run no Spark job") {
     val dir = Files.createTempDirectory("graft-budget").toString
     RunPipeline.run(spark, sources, cfg(dir, "budget-cold"))
-    // the warm cycle reads the state the cold one wrote
-    val (res, runJobs) = jobs("run")(RunPipeline.run(spark, sources, cfg(dir, "budget-warm")))
+    // the warm cycle reads the state the cold one wrote; its jobs carry its run id
+    val (res, runJobs) =
+      jobsUnder("budget-warm")(RunPipeline.run(spark, sources, cfg(dir, "budget-warm")))
     assert(res.summary.decision.status == "skip")
     assert(runJobs == 0, s"RunPipeline.run started $runJobs jobs")
 
@@ -74,7 +75,7 @@ class PipelineJobBudgetSpec extends JobCounting {
     assert(cold.contains("org.apache.spark.sql.catalyst.analysis.Analyzer$ResolveReferences"),
       s"the cold cycles ran no analysis: $cold")
     val ((res, runJobs), qes, warm) = AnalyzerRules.during(s)(
-      jobs("analysis-warm")(RunPipeline.run(s, sources, cfg(dir, "analysis-warm"))))
+      jobsUnder("analysis-warm")(RunPipeline.run(s, sources, cfg(dir, "analysis-warm"))))
     assert(res.summary.decision.status == "skip")
     assert(runJobs == 0, s"RunPipeline.run started $runJobs jobs")
     assert(qes == 3, s"RunPipeline.run ran $qes QueryExecutions")
