@@ -19,14 +19,17 @@ position once in every three pairs, and precedes each other leg equally
 often in every six. Seed counts that are a multiple of six balance exactly.
 
 Prints, per end-to-end metric of BENCHMARK.json, each leg's median and
-quartiles, the median paired delta (head vs base, in %) and the pairs the
-head won, and the same for the A/A leg; failed operations are summed per
-leg. Everything, every run included, goes to one JSON file. The script
+quartiles, the median paired delta (head vs base, in %) with its 95%
+percentile-bootstrap interval (pairs resampled with replacement, a fixed
+seed, so a rerun on the same JSON prints the same interval) and the pairs
+the head won, and the same for the A/A leg; failed operations are summed
+per leg. Everything, every run included, goes to one JSON file. The script
 only calls `perfbench/`; it changes nothing in it.
 """
 import argparse
 import json
 import os
+import random
 import shutil
 import statistics
 import subprocess
@@ -36,6 +39,10 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Bootstrap resamples per interval, and the resampler's seed.
+BOOT_N = 10000
+BOOT_SEED = 20260
 
 # The --aa run orders: the three rotations of base/head/aa, then the three
 # of its reverse — a Latin square per half, every permutation per cycle.
@@ -96,9 +103,20 @@ def fmt(q):
     return "/".join(f"{v:.4g}" for v in q)
 
 
+def bootstrap_ci(deltas, n=BOOT_N, seed=BOOT_SEED):
+    """95% percentile-bootstrap interval of the median of `deltas`: the
+    2.5th and 97.5th percentiles of the medians of `n` resamples, each
+    `len(deltas)` draws with replacement."""
+    rng = random.Random(seed)
+    k = len(deltas)
+    meds = sorted(statistics.median(rng.choices(deltas, k=k)) for _ in range(n))
+    return meds[int(0.025 * (n - 1))], meds[int(0.975 * (n - 1))]
+
+
 def compare(pairs, leg, metrics):
     """Per metric: each side's quartiles, the median paired delta of `leg`
-    against the base leg, and the pairs `leg` won."""
+    against the base leg with its bootstrap interval, and the pairs `leg`
+    won."""
     out = {}
     ok = [p for p in pairs if "metrics" in p["base"] and "metrics" in p[leg]]
     for name, better in metrics:
@@ -111,6 +129,7 @@ def compare(pairs, leg, metrics):
         bq, xq = quartiles(b), quartiles(x)
         out[name] = {"base": bq, leg: xq, "base_iqr": bq[2] - bq[0],
                      "median_delta_pct": statistics.median(deltas),
+                     "median_delta_ci95_pct": bootstrap_ci(deltas),
                      "wins": wins, "pairs": len(ok)}
     return out
 
@@ -165,10 +184,13 @@ def main():
     print(f"\n{a.workload}: {len(pairs)} pairs, failed {result['failed']}, "
           f"runs without a result {result['errors']}")
     for leg in [x for x in ("head", "aa") if f"{x}_vs_base" in result]:
-        print(f"{leg} vs base: metric | base q1/med/q3 | {leg} q1/med/q3 | median delta | wins")
+        print(f"{leg} vs base: metric | base q1/med/q3 | {leg} q1/med/q3 | median delta "
+              f"[95% CI] | wins")
         for name, r in result[f"{leg}_vs_base"].items():
+            lo, hi = r["median_delta_ci95_pct"]
             print(f"  {name} | {fmt(r['base'])} | {fmt(r[leg])} | "
-                  f"{r['median_delta_pct']:+.1f}% | {r['wins']}/{r['pairs']}")
+                  f"{r['median_delta_pct']:+.1f}% [{lo:+.1f}, {hi:+.1f}] | "
+                  f"{r['wins']}/{r['pairs']}")
     print(f"written to {a.out}")
     return 0 if not any(result["errors"].values()) else 1
 

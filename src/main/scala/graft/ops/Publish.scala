@@ -36,6 +36,13 @@ object Publish {
     "pozos_proximo" -> StringType, "provenance" -> StringType)
     .map { case (n, t) => StructField(n, t) })
 
+  /** [[recordToRows]]'s projection: the mode probe, the keys, each
+    * record's entries and premios, and its JSON cells. */
+  private[graft] def recordCells(records: Dataset[NormalizedRecord]): DataFrame =
+    records.toDF().select(size(col("premios")), col("sorteo"), col("fecha"),
+      col("fuente"), map_entries(col("pozos_proximo")), col("premios"),
+      to_json(col("pozos_proximo")), to_json(col("provenance")))
+
   /** Discrepancy rows (`publish.py:103-116`). */
   private val mismatchSchema: StructType = StructType(Seq(
     "sorteo" -> LongType, "categoria" -> StringType, "consensus" -> StringType,
@@ -61,9 +68,7 @@ object Publish {
     * One projection carries the mode probe, each record's entries and its
     * JSON cells; each record's entries become its rows. */
   def recordToRows(records: Dataset[NormalizedRecord]): DataFrame = {
-    val cells = records.toDF().select(size(col("premios")), col("sorteo"), col("fecha"),
-      col("fuente"), map_entries(col("pozos_proximo")), col("premios"),
-      to_json(col("pozos_proximo")), to_json(col("provenance"))).collect().toSeq
+    val cells = recordCells(records).collect().toSeq
     if (cells.headOption.exists(_.getInt(0) > 0))
       sheetRows(records.sparkSession, premioSchema, cells.flatMap(r => r.getSeq[Row](5).map(p =>
         Row(r.get(1), r.get(2), r.get(3), p.get(0), p.get(1), p.get(2), r.get(6), r.get(7)))))

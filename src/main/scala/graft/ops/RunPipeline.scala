@@ -210,13 +210,13 @@ object RunPipeline {
     artifactsPass(spark, Seq((record, report, summary)))(
       _.collect().head.toSeq.map(_.toString + "\n"))
 
-  private lazy val artifactsPass = new Prepared[(NormalizedRecord, Report, Summary)](
+  private[graft] lazy val artifactsPass = new Prepared[(NormalizedRecord, Report, Summary)](
     Encoders.product, df => df.select(df.columns.toSeq.map(c => to_json(col(c))): _*))
 
   private lazy val stateEncoder = Encoders.product[NormalizedRecord]
 
   /** Plan 2: the state lines parsed PERMISSIVE; see [[loadState]]. */
-  private lazy val statePass = new Prepared[String](Encoders.STRING, { lines =>
+  private[graft] lazy val statePass = new Prepared[String](Encoders.STRING, { lines =>
     val corrupt = "_corrupt_record"
     val schema = stateEncoder.schema.add(corrupt, StringType)
     lines

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object ConsensusOracle {
 
-  private def notTotal(c: Column): Column = !lower(c).startsWith("total")
+  /** Not a total* category, as the reference words it (`pipeline.py:154-155`). */
+  def notTotal(c: Column): Column = !lower(c).startsWith("total")
 
   /** One row per (source, categoria, valor) vote. */
   private def votes(payloads: DataFrame): DataFrame =

@@ -10,7 +10,8 @@ import graft.ops.Consensus
   * [[ConsensusOracle]] (the window formulation) on random payload sets:
   * one to four sources, each with its own priority, amounts drawn from a
   * small pool so values collide and vote counts tie; empty payloads,
-  * total*-only payloads and zero or negative winners all occur. */
+  * total*-only payloads and zero or negative winners all occur, and so do
+  * mixed-case total* names and non-ASCII look-alikes the filter keeps. */
 class ConsensusPropertySpec extends JobCounting {
   import ConsensusPropertySpec._
 
@@ -130,8 +131,11 @@ object ConsensusPropertySpec {
   /** (source_name, priority, montos). */
   type Payload = (String, Int, Map[String, Long])
 
-  private val categories = Seq("Loto Clásico", "Recargado", "Revancha", "Jubilazo")
-  private val totals = Seq("Total estimado", "TOTAL pozos")
+  /** Kept categories, total* look-alikes among them: fullwidth, a
+    * non-ASCII first letter, "total" not at the start. */
+  private val categories = Seq("Loto Clásico", "Recargado", "Revancha", "Jubilazo",
+    "ＴＯＴＡＬ", "İtotal", "Subtotal")
+  private val totals = Seq("Total estimado", "TOTAL pozos", "tOtAl x")
   private val amount = Gen.oneOf(-7L, 0L, 5L, 1000L, 1200L)
 
   private def amountsFor(cats: Seq[String]): Gen[Map[String, Long]] =

@@ -1,7 +1,10 @@
 package graft
 
+import com.ibm.icu.lang.UCharacter
+import com.ibm.icu.util.ULocale
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ops.{Consensus, StatePipeline}
 
 /** Consensus semantics pinned by the reference
@@ -40,6 +43,48 @@ class ConsensusSpec extends SparkSpec {
     val df = payloads(row("a", 0, Map("Loto" -> 10L, "Total estimado" -> 99L)))
     val cats = Consensus.merge(df).collect().map(_.getAs[String]("categoria")).toSet
     assert(cats == Set("Loto"))
+  }
+
+  test("ICU: only ASCII TtOoAaLl lowercase to a string starting with t, o, a or l") {
+    // Spark's Lower calls ICU's UCharacter.toLowerCase, with the JVM's
+    // default locale on the binary collation; ROOT is the locale-free
+    // mapping. Whole-string lowercasing is per code point except the
+    // Greek final sigma (σ or ς either way), and no code point lowercases
+    // to nothing, so lower(s) starts with "total" iff the first five code
+    // points of s are ASCII case variants of t, o, t, a, l: what
+    // Consensus.notTotal's `^(?i)total` (ASCII-only case folding) tests.
+    val scalars = (0 to Character.MAX_CODE_POINT).iterator
+      .filterNot(cp => cp >= Character.MIN_SURROGATE && cp <= Character.MAX_SURROGATE)
+      .map(cp => new String(Character.toChars(cp)))
+    val lowers = Seq[String => String](
+      UCharacter.toLowerCase(ULocale.ROOT, _), UCharacter.toLowerCase(_: String))
+    val hits = scala.collection.mutable.SortedSet.empty[String]
+    var scanned, empty = 0
+    for (s <- scalars; lc <- lowers) {
+      val l = lc(s)
+      if (l.isEmpty) empty += 1
+      else if ("toal".indexOf(l.charAt(0)) >= 0) hits += s
+      scanned += 1
+    }
+    assert(scanned == 2 * (Character.MAX_CODE_POINT + 1 - 2048))
+    assert(empty == 0)
+    assert(hits.mkString == "ALOTalot")
+  }
+
+  test("total* filter agrees with lower(c).startsWith on adversarial names") {
+    val names = Seq("Total estimado", "TOTAL pozos", "tOtAl", "totales", "Subtotal",
+      "\uFF34\uFF2F\uFF34\uFF21\uFF2C", // fullwidth ＴＯＴＡＬ
+      "\u0130total", "\u212Aotal", "Kotal", // İtotal, Kelvin-sign Kotal
+      "total\u0301", "t\u0301otal", "to\u0307tal", // combining marks
+      "\u0162otal", "TOTA", "", null)
+    val df = spark.createDataFrame(java.util.Arrays.asList(names.map(Row(_)): _*),
+      StructType(Seq(StructField("c", StringType))))
+    val got = df.select(col("c"), Consensus.notTotal(col("c")).as("now"),
+      ConsensusOracle.notTotal(col("c")).as("ref")).collect()
+    assert(got.length == names.length)
+    for (r <- got)
+      assert(r.get(1) == r.get(2), s"'${r.get(0)}': notTotal=${r.get(1)}, lower-based=${r.get(2)}")
+    assert(got.count(r => r.get(1) == false) == 5) // the five total* names
   }
 
   test("missing sources reported per category") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.expressions.{ILike, InitCap, Lower, Upper}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import graft.Model._
 import graft.ops.{Consensus, Publish, RunPipeline}
@@ -80,6 +82,38 @@ class PipelineJobBudgetSpec extends JobCounting {
     assert(runJobs == 0, s"RunPipeline.run started $runJobs jobs")
     assert(qes == 3, s"RunPipeline.run ran $qes QueryExecutions")
     assert(warm.isEmpty, s"analyzer rules in a warm cycle: $warm")
+  }
+
+  /** The Spark case-mapping nodes of `plan`, lambda bodies included. */
+  private def caseMappings(plan: LogicalPlan): Seq[String] =
+    plan.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: Lower | _: Upper | _: InitCap | _: ILike) => e.nodeName
+    }))
+
+  test("the EP1 plans evaluate no Spark case mapping (lower, upper, initcap, ilike)") {
+    // The first of these a JVM evaluates runs CollationAwareUTF8String's
+    // static initializer, which calls ICU once for each of the 1,114,112
+    // code points to build a title-case table: about 1.4 s inside the
+    // plan-time fold of the first cycle of every `graft.Main run`. Case
+    // folding in these plans is ASCII regex (`Consensus.notTotal`) or
+    // driver-side `String.toLowerCase`.
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-casemap").toString
+    val res = RunPipeline.run(spark, sources, cfg(dir, "casemap"))
+    val plans = Seq(
+      "consensusPass" -> RunPipeline.consensusPass(spark, Seq(Tuple1(res.collected)))(
+        _.queryExecution.analyzed),
+      "statePass" -> RunPipeline.statePass(spark, Seq(toJson(res.record)))(
+        _.queryExecution.analyzed),
+      "artifactsPass" -> RunPipeline.artifactsPass(spark, Seq((res.record, res.report,
+        res.summary)))(_.queryExecution.analyzed),
+      "recordToRows" -> Publish.recordCells(spark.createDataset(Seq(res.record)))
+        .queryExecution.analyzed)
+    for ((name, plan) <- plans)
+      assert(caseMappings(plan).isEmpty, s"$name evaluates ${caseMappings(plan)}")
+    // the walk does see a case mapping where one is
+    val reference = ConsensusOracle.merge(sources.map(_.fetch()).toDS().toDF())
+    assert(caseMappings(reference.queryExecution.analyzed).contains("Lower"))
   }
 
   test("Consensus.merge over a DataFrame runs at most 2 Spark jobs") {
