@@ -23,8 +23,11 @@ quartiles, the median paired delta (head vs base, in %) with its 95%
 percentile-bootstrap interval (pairs resampled with replacement, a fixed
 seed, so a rerun on the same JSON prints the same interval) and the pairs
 the head won, and the same for the A/A leg; failed operations are summed
-per leg. Everything, every run included, goes to one JSON file. The script
-only calls `perfbench/`; it changes nothing in it.
+per leg. A metric whose A/A interval excludes 0 is marked `aa_not_centred`
+(printed on its lines and listed in the JSON): identical code moved on it
+by more than the resampling explains, so the head's delta on that metric
+is printed as unresolved. Everything, every run included, goes to one JSON
+file. The script only calls `perfbench/`; it changes nothing in it.
 """
 import argparse
 import json
@@ -113,6 +116,11 @@ def bootstrap_ci(deltas, n=BOOT_N, seed=BOOT_SEED):
     return meds[int(0.025 * (n - 1))], meds[int(0.975 * (n - 1))]
 
 
+def excludes_zero(ci):
+    lo, hi = ci
+    return lo > 0 or hi < 0
+
+
 def compare(pairs, leg, metrics):
     """Per metric: each side's quartiles, the median paired delta of `leg`
     against the base leg with its bootstrap interval, and the pairs `leg`
@@ -178,11 +186,14 @@ def main():
               "head_vs_base": compare(pairs, "head", metrics)}
     if a.aa:
         result["aa_vs_base"] = compare(pairs, "aa", metrics)
+        result["aa_not_centred"] = [name for name, r in result["aa_vs_base"].items()
+                                    if excludes_zero(r["median_delta_ci95_pct"])]
     with open(a.out, "w") as f:
         json.dump(result, f, indent=1)
 
     print(f"\n{a.workload}: {len(pairs)} pairs, failed {result['failed']}, "
           f"runs without a result {result['errors']}")
+    flagged = {"head": " | aa_not_centred: unresolved", "aa": " | aa_not_centred"}
     for leg in [x for x in ("head", "aa") if f"{x}_vs_base" in result]:
         print(f"{leg} vs base: metric | base q1/med/q3 | {leg} q1/med/q3 | median delta "
               f"[95% CI] | wins")
@@ -190,7 +201,8 @@ def main():
             lo, hi = r["median_delta_ci95_pct"]
             print(f"  {name} | {fmt(r['base'])} | {fmt(r[leg])} | "
                   f"{r['median_delta_pct']:+.1f}% [{lo:+.1f}, {hi:+.1f}] | "
-                  f"{r['wins']}/{r['pairs']}")
+                  f"{r['wins']}/{r['pairs']}"
+                  + (flagged[leg] if name in result.get("aa_not_centred", []) else ""))
     print(f"written to {a.out}")
     return 0 if not any(result["errors"].values()) else 1
 

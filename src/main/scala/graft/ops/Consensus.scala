@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 /** Majority-vote consensus engine.
   *
@@ -100,14 +101,14 @@ object Consensus {
         e.getField("categoria").as("categoria"),
         w.as("valor"),
         winner.getField("voters").as("winner_sources"),
-        size(rs).cast("long").as("n_candidates"),
+        size(rs).cast(LongType).as("n_candidates"),
         map_from_entries(transform(filter(rs, (_, i) => i > 0),
-          r => struct(r.getField("valor").cast("string").as("key"),
+          r => struct(r.getField("valor").cast(StringType).as("key"),
             r.getField("voters").as("value")))).as("disagreeing"),
         // divisor nulled when winner ≤ 0: ANSI mode would error on /0;
         // reference semantics (`pipeline.py:176-181`) = deviation 0.
         coalesce(round(array_max(transform(rs,
-            r => abs(r.getField("valor") - w) / when(w > 0, w.cast("double")))), 4),
+            r => abs(r.getField("valor") - w) / when(w > 0, w.cast(DoubleType)))), 4),
           lit(0.0)).as("max_deviation"),
         filter(allSources, s => !exists(e.getField("cands"),
           c => c.getField("source_name") === s)).as("missing_sources"),

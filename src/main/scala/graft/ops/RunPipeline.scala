@@ -2,7 +2,8 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Encoders, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -215,13 +216,22 @@ object RunPipeline {
 
   private lazy val stateEncoder = Encoders.product[NormalizedRecord]
 
-  /** Plan 2: the state lines parsed PERMISSIVE; see [[loadState]]. */
+  /** Plan 2: the state lines parsed PERMISSIVE; see [[loadState]].
+    *
+    * The parse is a `JsonToStructs` node built over the encoder's
+    * `StructType`, not `from_json(Column, StructType, ...)`: in Spark 4 that
+    * call hands the schema to the analyzer as a DDL string, so the first
+    * state read of every JVM ran the schema through the ANTLR SQL parser
+    * (its classes plus a DFA warm-up over the nested types, about 300 ms).
+    * The parsed type is the same either way (`JsonToStructs` parses with
+    * `schema.asNullable`). */
   private[graft] lazy val statePass = new Prepared[String](Encoders.STRING, { lines =>
     val corrupt = "_corrupt_record"
     val schema = stateEncoder.schema.add(corrupt, StringType)
+    val options = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt)
     lines
-      .select(from_json(col("value"), schema,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt)).as("r"))
+      .select(GraftColumnBridge.column(JsonToStructs(schema, options,
+        GraftColumnBridge.expression(col("value")))).as("r"))
       .select("r.*")
       .filter(col(corrupt).isNull && col("provenance.pozos.primary").isNotNull &&
         col("pozos_proximo").isNotNull && col("confidence").isNotNull)
@@ -229,7 +239,7 @@ object RunPipeline {
   })
 
   /** PERMISSIVE JSONL state read (reference `pipeline.py:66-79`): lines
-    * are read on the driver and parsed by `from_json` over a local
+    * are read on the driver and parsed by [[statePass]] over a local
     * relation, so no Spark job runs. Blank lines are skipped; so are
     * corrupt lines and records that lack a required field (`provenance`
     * down to its primary source, `pozos_proximo`, `confidence`) — one

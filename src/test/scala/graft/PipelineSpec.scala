@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.Try
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.types.{LongType, MapType, StringType, StructType}
 import graft.Model._
 import graft.ops.RunPipeline
 import graft.sources.{FixtureTransport, Fetcher, HtmlPozoSource, PozoSource}
@@ -132,6 +136,61 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(statePath, s"$partial\n$array\n\n$good")
     assert(RunPipeline.loadState(spark, statePath.toString).map(_.pozos_proximo) ==
       Seq(Map("Loto" -> 1L)))
+  }
+
+  test("state read equals its from_json twin on corrupt, partial and mistyped lines") {
+    val dir = tmpDir()
+    RunPipeline.run(spark, Seq(stub("a", 0, Map("Loto" -> 1000L, "Recargado" -> 5L)),
+      stub("b", 1, Map("Loto" -> 1200L))), cfg(dir))
+    val good = Files.readString(Paths.get(dir, "state", "last_run.jsonl")).trim
+    def swap(regex: String, to: String) = {
+      val out = good.replaceFirst(regex, to)
+      assert(out != good, regex)
+      out
+    }
+    val lines = Seq(
+      good,
+      "{not json}",
+      s"[$good]",
+      swap("\"primary\":", "\"primary_x\":"),
+      swap("\"confidence\":", "\"confidence_x\":"),
+      swap("\"pozos_proximo\":", "\"pozos_x\":"),
+      swap("\"pozos_proximo\":\\{[^}]*\\}", "\"pozos_proximo\":{\"x\":null}"),
+      "{\"extra\":[1,{\"y\":2}],\"otra\":null," + good.drop(1),
+      swap("\"confidence\":\"[^\"]*\"", "\"confidence\":5"),
+      swap("\"sorteo\":5417", "\"sorteo\":\"5417\""),
+      swap("\"pozos_proximo\":\\{[^}]*\\}", "\"pozos_proximo\":{\"Ñandú\":7,\"Loto Clásico\":1}"),
+      "{\"año\":2026," + good.drop(1),
+      "{}",
+      "",
+      "   ")
+    def parsed(pass: graft.ops.Prepared[String]) = pass(spark, lines) { df =>
+      (df.schema, df.collect().toSeq,
+        df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+          case j: JsonToStructs => j.schema })))
+    }
+    val (schema, rows, Seq(stored)) = parsed(RunPipeline.statePass)
+    val (twinSchema, twinRows, Seq(twinStored)) = parsed(StateReadOracle.statePass)
+    assert(schema == twinSchema)
+    assert(rows == twinRows)
+    assert(rows.size == 6, rows.mkString("\n")) // the kept lines, in input order
+    // the stored schema is the encoder's; the twin's made a DDL round trip,
+    // which keeps no map value nullability (the parse reads both as nullable)
+    val encoded = Encoders.product[NormalizedRecord].schema.add("_corrupt_record", StringType)
+    assert(stored == encoded)
+    assert(twinStored == StructType(encoded.map(f => if (f.name != "pozos_proximo") f
+      else f.copy(dataType = MapType(StringType, LongType, valueContainsNull = true)))))
+
+    val statePath = Paths.get(dir, "state.jsonl")
+    def bothRead(content: String) = {
+      Files.writeString(statePath, content)
+      val (a, b) = (Try(RunPipeline.loadState(spark, statePath.toString)),
+        Try(StateReadOracle.loadState(spark, statePath.toString)))
+      assert(a.toEither.left.map(_.toString) == b.toEither.left.map(_.toString), content)
+      a
+    }
+    for (line <- lines) bothRead(line + "\n")
+    assert(bothRead(lines.mkString("\r\n")).isSuccess)
   }
 
   test("normalized artifact round-trips through the typed JSONL scan") {
