@@ -220,11 +220,11 @@ object RunPipeline {
     *
     * The parse is a `JsonToStructs` node built over the encoder's
     * `StructType`, not `from_json(Column, StructType, ...)`: in Spark 4 that
-    * call hands the schema to the analyzer as a DDL string, so the first
-    * state read of every JVM ran the schema through the ANTLR SQL parser
-    * (its classes plus a DFA warm-up over the nested types, about 300 ms).
-    * The parsed type is the same either way (`JsonToStructs` parses with
-    * `schema.asNullable`). */
+    * call hands the schema to the analyzer as a DDL string for the ANTLR
+    * SQL parser, and on the first state read of a JVM (every daily `run`
+    * and `publish`) that parse loads the parser and warms its DFA over the
+    * nested types, about 300 ms. The parsed type is the same either way
+    * (`JsonToStructs` parses with `schema.asNullable`). */
   private[graft] lazy val statePass = new Prepared[String](Encoders.STRING, { lines =>
     val corrupt = "_corrupt_record"
     val schema = stateEncoder.schema.add(corrupt, StringType)
