@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
+  StringType, StructType, TimestampType}
 
 import graft.functions.{PollaFunctions, PollaParsers}
 import graft.ops.{Bpe, Consensus, Dedup, Drift, Ids, Multimodal, Retrieval, Sampling, Similarity, StatePipeline, TextAnalysis}
@@ -41,7 +42,7 @@ object Queries {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 4))
   /** Exact decimal sum → rounded double: order-independent across engines. */
-  private def decSum2(c: Column): Column = round(sum(dec(c)), 2).cast("double")
+  private def decSum2(c: Column): Column = round(sum(dec(c)), 2).cast(DoubleType)
   private def tsFmt(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
   private def tsFmtMicro(c: Column): Column =
     date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
@@ -176,7 +177,7 @@ object Queries {
     // ---- Q1: scan + project + filter (predicates push to parquet scan) ----
     QDef("q01_filter_project",
       (s, d) => lineitem(s, d)
-        .filter(col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
+        .filter(col("l_shipdate") < lit("1997-01-01").cast(TimestampType) &&
           col("l_discount").between(0.05, 0.07))
         .select("l_orderkey", "l_linenumber", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber"),
@@ -210,7 +211,7 @@ object Queries {
     QDef("q04_anti_join",
       (s, d) => customer(s, d)
         .join(orders(s, d)
-            .filter(col("o_orderdate") >= lit("2001-01-01").cast("timestamp")),
+            .filter(col("o_orderdate") >= lit("2001-01-01").cast(TimestampType)),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey")
         .orderBy("c_custkey"),
@@ -222,7 +223,7 @@ object Queries {
     QDef("q05_left_join_changedetect",
       (s, d) => {
         val early = orders(s, d)
-          .filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
+          .filter(col("o_orderdate") < lit("1998-01-01").cast(TimestampType))
           .select(col("o_orderkey").as("b_key")).distinct()
         orders(s, d).join(early, col("o_orderkey") === col("b_key"), "left")
           .select(col("o_orderkey"),
@@ -331,7 +332,7 @@ object Queries {
         round(max(abs(col("l_extendedprice") * (lit(1) - col("l_discount")) -
           col("l_extendedprice")) / col("l_extendedprice")), 4).as("maxdev"),
         round(sum(when(col("l_returnflag") === "R", 1).otherwise(0)) /
-          count(lit(1)).cast("double"), 4).as("ratio")),
+          count(lit(1)).cast(DoubleType), 4).as("ratio")),
       Some("""SELECT COUNT(*) AS total, COUNT(DISTINCT l_partkey) AS parts,
         |ROUND(MAX(ABS(l_extendedprice*(1-l_discount) - l_extendedprice)/l_extendedprice),4) AS maxdev,
         |ROUND(CAST(SUM(CASE WHEN l_returnflag='R' THEN 1 ELSE 0 END) AS DOUBLE)/COUNT(*),4) AS ratio
@@ -367,7 +368,7 @@ object Queries {
             col("n"), col("qd"))
         lvl2.unionAll(lvl1).unionAll(lvl0)
           .select(col("l_returnflag"), col("l_linestatus"), col("n"),
-            round(col("qd"), 2).cast("double").as("q"))
+            round(col("qd"), 2).cast(DoubleType).as("q"))
           .orderBy("l_returnflag", "l_linestatus")
       },
       Some("""SELECT COALESCE(l_returnflag,'_all_') AS l_returnflag,
@@ -436,7 +437,7 @@ object Queries {
         .select(col("o_orderkey"),
           upper(col("o_orderpriority")).as("pri"),
           substring(col("o_orderstatus"), 1, 1).as("st"),
-          year(col("o_orderdate")).cast("long").as("y"),
+          year(col("o_orderdate")).cast(LongType).as("y"),
           date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM-dd").as("m"),
           round(log10(col("o_totalprice")), 3).as("lg"))
         .orderBy("o_orderkey")
@@ -452,7 +453,7 @@ object Queries {
       (s, d) => events(s, d)
         .select(col("event_id"), lit("type").as("k"), col("event_type").as("v"))
         .unionAll(events(s, d)
-          .select(col("event_id"), lit("uid").as("k"), col("user_id").cast("string").as("v")))
+          .select(col("event_id"), lit("uid").as("k"), col("user_id").cast(StringType).as("v")))
         .orderBy("event_id", "k")
         .limit(5000),
       Some("""SELECT event_id, 'type' AS k, event_type AS v FROM events
@@ -465,7 +466,7 @@ object Queries {
           .select(col("event_id"), col("props")),
           Some(hash(col("event_id"))))
         .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("kval"))
+          get_json_object(col("props"), "$.k").cast(LongType).as("kval"))
         .orderBy("event_id")
         .limit(5000),
       Some("""SELECT event_id, CAST(props->>'k' AS BIGINT) AS kval FROM events
@@ -529,7 +530,7 @@ object Queries {
         // shuffle_hash that paid the full lineitem+orders exchange at
         // every SF, 12.6× the oracle at sf0.1).
         val ordersSkinny = orders(s, d)
-          .select(col("o_orderkey"), year(col("o_orderdate")).cast("long").as("y"))
+          .select(col("o_orderkey"), year(col("o_orderdate")).cast(LongType).as("y"))
         val ordersDim =
           if (Tables.footerRowCount(s, d, "orders") <= 25000000L)
             broadcast(ordersSkinny)
@@ -544,7 +545,7 @@ object Queries {
           .select("l_orderkey", "n_regionkey", "pr")
           .join(ordersDim, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("n_regionkey"), col("y"))
-          .agg(round(sum(col("pr")), 2).cast("double").as("rev"))
+          .agg(round(sum(col("pr")), 2).cast(DoubleType).as("rev"))
           .join(broadcast(region(s, d)), col("n_regionkey") === col("r_regionkey"))
           .select(col("r_name"), col("y"), col("rev"))
           .orderBy("r_name", "y")
@@ -577,9 +578,9 @@ object Queries {
         .groupBy("l_partkey")
         .agg(
           round(sum(when(col("l_returnflag") === "A", dec(col("l_quantity")))
-            .otherwise(dec(lit(0)))), 2).cast("double").as("a"),
+            .otherwise(dec(lit(0)))), 2).cast(DoubleType).as("a"),
           round(sum(when(col("l_returnflag") === "R", dec(col("l_quantity")))
-            .otherwise(dec(lit(0)))), 2).cast("double").as("r"))
+            .otherwise(dec(lit(0)))), 2).cast(DoubleType).as("r"))
         .orderBy("l_partkey")
         .limit(1000),
       Some("""SELECT l_partkey,
@@ -604,7 +605,7 @@ object Queries {
     // ---- Q22: array ops over embeddings ----
     QDef("q22_array_dim",
       (s, d) => embeddings(s, d)
-        .select(col("vec_id"), col("label"), size(col("embedding")).cast("long").as("dim"))
+        .select(col("vec_id"), col("label"), size(col("embedding")).cast(LongType).as("dim"))
         .orderBy("vec_id")
         .limit(100),
       Some("""SELECT vec_id, label, CAST(len(embedding) AS BIGINT) AS dim
@@ -616,7 +617,7 @@ object Queries {
         .groupBy("lang")
         .agg(count(lit(1)).as("n"),
           round(avg("n_chars"), 2).as("avg_chars"),
-          min(length(col("text"))).cast("long").as("minlen"))
+          min(length(col("text"))).cast(LongType).as("minlen"))
         .orderBy("lang"),
       Some("""SELECT lang, COUNT(*) AS n, ROUND(AVG(n_chars),2) AS avg_chars,
         |CAST(MIN(LENGTH(text)) AS BIGINT) AS minlen
@@ -644,7 +645,7 @@ object Queries {
               unix_micros(col("ts")) - unix_micros(lag("ts", 1).over(w)) > 600000000L, 1)
               .otherwise(0))
           .withColumn("sid", sum("flag").over(w))
-          .groupBy(col("user_id"), col("sid").cast("long").as("session_id"))
+          .groupBy(col("user_id"), col("sid").cast(LongType).as("session_id"))
           .agg(count(lit(1)).as("n"),
             tsFmtMicro(min(col("ts"))).as("s_start"),
             tsFmtMicro(max(col("ts"))).as("s_end"))
@@ -695,7 +696,7 @@ object Queries {
       (s, d) => graft.ops.Profiler.quantilesByKey(
           events(s, d)
             .select(col("event_type").as("column"),
-              col("value").cast("double").as("v"))
+              col("value").cast(DoubleType).as("v"))
             .filter(col("v").isNotNull),
           ps = Seq(0.5, 0.9, 0.99), dp = 2,
           smallHint = Tables.footerRowCount(s, d, "events") <=
@@ -821,14 +822,14 @@ object Queries {
     QDef("text_pii",
       (s, d) => {
         val injected = when(pmod(col("doc_id"), lit(7)) === 0,
-          concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
+          concat(col("text"), lit(" contact user"), col("doc_id").cast(StringType),
             lit("@example.com tel +56 9 1234 5678"))).otherwise(col("text"))
         TextAnalysis.piiFeatures(documents(s, d).withColumn("text", injected))
           .select(col("doc_id"),
-            col("n_emails").cast("long").as("n_emails"),
-            col("n_phones").cast("long").as("n_phones"),
+            col("n_emails").cast(LongType).as("n_emails"),
+            col("n_phones").cast(LongType).as("n_phones"),
             col("has_pii"),
-            length(col("redacted")).cast("long").as("redacted_len"))
+            length(col("redacted")).cast(LongType).as("redacted_len"))
           .orderBy("doc_id")
       },
       Some(s"""WITH inj AS (SELECT doc_id,
@@ -920,7 +921,7 @@ object Queries {
         .withColumn("n_types_so_far",
           size(collect_set(col("event_type")).over(
             Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))))
-            .cast("long"))
+            .cast(LongType))
         .select(col("event_id"), col("user_id"), col("n_types_so_far"))
         .orderBy("event_id"),
       Some("""SELECT event_id, user_id,
@@ -966,7 +967,7 @@ object Queries {
           .select(array_min(col("ws")).as("cohort"), explode(col("ws")).as("w"))
           .select(date_format(col("cohort"), "yyyy-MM-dd").as("cohort_week"),
             ((unix_timestamp(col("w")) - unix_timestamp(col("cohort"))) / 604800)
-              .cast("long").as("week_offset"))
+              .cast(LongType).as("week_offset"))
           .groupBy("cohort_week", "week_offset")
           .agg(count(lit(1)).as("n_active"))
           .orderBy("cohort_week", "week_offset")
@@ -1051,9 +1052,9 @@ object Queries {
       (s, d) => orders(s, d)
         .select(col("o_orderkey"),
           concat(col("o_orderpriority"), lit("-"), col("o_orderstatus")).as("tag"),
-          lpad(col("o_orderkey").cast("string"), 10, "0").as("padded"),
+          lpad(col("o_orderkey").cast(StringType), 10, "0").as("padded"),
           regexp_replace(col("o_orderpriority"), "-", "_").as("norm"),
-          instr(col("o_orderpriority"), "-").cast("long").as("dashpos"),
+          instr(col("o_orderpriority"), "-").cast(LongType).as("dashpos"),
           regexp_extract(col("o_orderpriority"), "(\\d+)", 1).as("prio_num"))
         .orderBy("o_orderkey")
         .limit(1000),
@@ -1097,17 +1098,17 @@ object Queries {
             .orderBy(col("value"), col("event_id"))
           events(s, d)
             .select(col("event_id"), col("event_type"),
-              rank().over(w).cast("long").as("rnk"),
-              dense_rank().over(w).cast("long").as("drnk"),
+              rank().over(w).cast(LongType).as("rnk"),
+              dense_rank().over(w).cast(LongType).as("drnk"),
               round(percent_rank().over(w), 4).as("prnk"),
-              ntile(4).over(w).cast("long").as("quartile"),
+              ntile(4).over(w).cast(LongType).as("quartile"),
               round(cume_dist().over(w), 4).as("cd"))
             .orderBy("event_id")
             .limit(5000)
         } else {
           val rn = col("__rn")
           val n = col("__n")
-          val n1 = (n - 1).cast("double")
+          val n1 = (n - 1).cast(DoubleType)
           // integer ntile(4) arithmetic on (rn, n): big buckets first
           val bs = floor(n / 4)         // ⌊n/4⌋ (double-safe: n ≤ 2^53)
           val rem = n % 4
@@ -1119,12 +1120,12 @@ object Queries {
               events(s, d).select(col("event_id"), col("event_type"), col("value")),
               Seq("event_type"), Seq("value", "event_id"))
             .select(col("event_id"), col("event_type"),
-              rn.cast("long").as("rnk"),
-              rn.cast("long").as("drnk"),
-              round(when(n1 === 0, 0.0).otherwise((rn - 1).cast("double") / n1), 4)
+              rn.cast(LongType).as("rnk"),
+              rn.cast(LongType).as("drnk"),
+              round(when(n1 === 0, 0.0).otherwise((rn - 1).cast(DoubleType) / n1), 4)
                 .as("prnk"),
-              quartile.cast("long").as("quartile"),
-              round(rn.cast("double") / n.cast("double"), 4).as("cd"))
+              quartile.cast(LongType).as("quartile"),
+              round(rn.cast(DoubleType) / n.cast(DoubleType), 4).as("cd"))
             .orderBy("event_id")
             .limit(5000)
         }
@@ -1141,7 +1142,7 @@ object Queries {
     // accumulation order matches DuckDB's list aggregates bit-for-bit) ----
     QDef("q37_array_math",
       (s, d) => {
-        val emb = col("embedding").cast("array<double>")
+        val emb = col("embedding").cast(ArrayType(DoubleType))
         embeddings(s, d)
           .select(col("vec_id"),
             round(Similarity.norm(emb), 4).as("l2"),
@@ -1239,7 +1240,7 @@ object Queries {
         val pairs = Dedup.tokenJaccardPairs(docs, threshold = 0.5)
         Dedup.clusters(docs, pairs)
           .select(col("doc_id"), col("cluster_id"),
-            col("cluster_size").cast("long").as("cluster_size"), col("is_keeper"))
+            col("cluster_size").cast(LongType).as("cluster_size"), col("is_keeper"))
           .orderBy("doc_id")
       },
       Some("""WITH RECURSIVE d AS (SELECT doc_id,
@@ -1467,7 +1468,7 @@ object Queries {
       (s, d) => Dedup.simhashCandidates(documents(s, d), maxHamming = 3,
           portable = true,
           corpusDocs = Some(Tables.footerRowCount(s, d, "documents")))
-        .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
+        .select(col("doc_a"), col("doc_b"), col("hamming").cast(LongType).as("hamming"))
         .orderBy("doc_a", "doc_b"),
       Some("""WITH tk AS (SELECT doc_id,
         |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok FROM documents),
@@ -1621,8 +1622,8 @@ object Queries {
     QDef("q35_range_join",
       (s, d) => {
         val bands = s.range(0, 10).select(col("id").as("band"),
-          (col("id") * 50000).cast("double").as("lo"),
-          ((col("id") + 1) * 50000).cast("double").as("hi"))
+          (col("id") * 50000).cast(DoubleType).as("lo"),
+          ((col("id") + 1) * 50000).cast(DoubleType).as("hi"))
         orders(s, d)
           .join(broadcast(bands),
             col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
@@ -1658,7 +1659,7 @@ object Queries {
         // value bit-for-bit (norm is a pure function of the vector; the
         // division is the same expression), 1/3 the pair-stage flops.
         val e = embeddings(s, d).select(col("vec_id"),
-          col("embedding").cast("array<double>").as("emb"))
+          col("embedding").cast(ArrayType(DoubleType)).as("emb"))
           .withColumn("bucket", Similarity.signBucket(col("emb"), 8))
           .withColumn("nrm", Similarity.norm(col("emb")))
         val a = e.select(col("bucket"), col("vec_id").as("vec_a"),
@@ -1707,7 +1708,7 @@ object Queries {
         val n = Tables.footerRowCount(s, d, "embeddings")
         val b = Similarity.corpusScaledSignBits(n)
         val e = embeddings(s, d).select(col("vec_id"),
-          col("embedding").cast("array<double>").as("emb"))
+          col("embedding").cast(ArrayType(DoubleType)).as("emb"))
           .withColumn("bucket", Similarity.signBucket(col("emb"), b))
           .withColumn("nrm", Similarity.norm(col("emb")))
         val a = e.select(col("bucket"), col("vec_id").as("vec_a"),
@@ -1744,7 +1745,7 @@ object Queries {
       (s, d) => {
         val e = embeddings(s, d)
         Similarity.bruteForceTopK(e.filter(col("vec_id") < 5), e, k = 10)
-          .select(col("q_id"), col("c_id"), col("sim"), col("rank").cast("long").as("rank"))
+          .select(col("q_id"), col("c_id"), col("sim"), col("rank").cast(LongType).as("rank"))
           .orderBy("q_id", "rank")
       },
       Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -1770,7 +1771,7 @@ object Queries {
         val e = embeddings(s, d)
         Similarity.ivfTopK(e.filter(col("vec_id") < 5), e, k = 10,
             nCells = 16, nprobe = 4)
-          .select(col("q_id"), col("c_id"), col("sim"), col("rank").cast("long").as("rank"))
+          .select(col("q_id"), col("c_id"), col("sim"), col("rank").cast(LongType).as("rank"))
           .orderBy("q_id", "rank")
       },
       Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -1871,7 +1872,7 @@ object Queries {
         val e = embeddings(s, d)
         Similarity.pqTopK(e.filter(col("vec_id") < 5), e, k = 10,
             m = 4, codes = 16, iters = 1)
-          .select(col("q_id"), col("c_id"), col("adc"), col("rank").cast("long").as("rank"))
+          .select(col("q_id"), col("c_id"), col("adc"), col("rank").cast(LongType).as("rank"))
           .orderBy("q_id", "rank")
       },
       Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -1918,7 +1919,7 @@ object Queries {
       (s, d) => {
         val e = embeddings(s, d)
         Similarity.bucketedTopK(e.filter(col("vec_id") < 5), e, k = 10)
-          .select(col("q_id"), col("c_id"), col("sim"), col("rank").cast("long").as("rank"))
+          .select(col("q_id"), col("c_id"), col("sim"), col("rank").cast(LongType).as("rank"))
           .orderBy("q_id", "rank")
       },
       Some {
@@ -1970,7 +1971,7 @@ object Queries {
           .orderBy(col("cos").desc, col("doc_id"), col("chunk_id"))
         plans.GroupedTopK.perKey(scored, "query_doc",
             Seq("cos" -> false, "doc_id" -> true, "chunk_id" -> true), k = 5)
-          .withColumn("rank", row_number().over(w).cast("long"))
+          .withColumn("rank", row_number().over(w).cast(LongType))
           .select("query_doc", "rank", "doc_id", "chunk_id", "cos")
           .orderBy("query_doc", "rank")
       },
@@ -2004,8 +2005,8 @@ object Queries {
     QDef("text_tokens",
       (s, d) => documents(s, d)
         .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          length(col("text")).cast("long").as("len_chars"))
+          TextAnalysis.tokenCount(col("text")).cast(LongType).as("n_tokens"),
+          length(col("text")).cast(LongType).as("len_chars"))
         .orderBy("doc_id"),
       Some("""SELECT doc_id,
         |CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
@@ -2148,10 +2149,10 @@ object Queries {
           "MACHINERY")
         orders(s, d)
           .join(customer(s, d), col("o_custkey") === col("c_custkey"))
-          .select(year(col("o_orderdate")).cast("long").as("yr"),
+          .select(year(col("o_orderdate")).cast(LongType).as("yr"),
             col("c_mktsegment"), col("o_totalprice"))
           .groupBy("yr").pivot("c_mktsegment", segs)
-          .agg(round(sum(dec(col("o_totalprice"))), 2).cast("double"))
+          .agg(round(sum(dec(col("o_totalprice"))), 2).cast(DoubleType))
           .orderBy("yr")
       },
       Some {
@@ -2219,14 +2220,14 @@ object Queries {
               .hint("shuffle_hash"),
             col("l_orderkey") === col("o_orderkey"))
           .select("o_custkey", "l_suppkey").distinct()
-          .select(shiftleft(col("o_custkey"), 1).cast("long").as("src"),
-            (shiftleft(col("l_suppkey"), 1) + 1).cast("long").as("dst"))
+          .select(shiftleft(col("o_custkey"), 1).cast(LongType).as("src"),
+            (shiftleft(col("l_suppkey"), 1) + 1).cast(LongType).as("dst"))
         graft.ops.Graph.pageRank(e, "src", "dst", iters = 5)
           .select(
             when(col("node") % 2 === 0,
-              concat(lit("c"), shiftright(col("node"), 1).cast("string")))
+              concat(lit("c"), shiftright(col("node"), 1).cast(StringType)))
               .otherwise(
-                concat(lit("s"), shiftright(col("node"), 1).cast("string")))
+                concat(lit("s"), shiftright(col("node"), 1).cast(StringType)))
               .as("node"),
             col("deg"), col("rank"))
           .orderBy("node")
@@ -2347,7 +2348,7 @@ object Queries {
           .withColumn("log_tokens",
             round(log(lit(1.0) + col("n_tokens")), 6))
           .withColumn("y",
-            (TextAnalysis.qualityScoreExpr(col("text")) >= 0.3).cast("double"))
+            (TextAnalysis.qualityScoreExpr(col("text")) >= 0.3).cast(DoubleType))
         graft.ops.LinearModels.logisticGd(f,
           Seq("log_tokens" -> col("log_tokens"),
             "stop_ratio" -> col("stop_ratio"),
@@ -2406,7 +2407,7 @@ object Queries {
     // one canonical form; 25 pages × 4 forms over the corpus. ----
     QDef("url_canonicalize",
       (s, d) => {
-        val page = (col("doc_id") % 25).cast("string")
+        val page = (col("doc_id") % 25).cast(StringType)
         val raw = when(col("doc_id") % 4 === 0,
             concat(lit("https://www.crawl-site.com/page/"), page,
               lit("?id=1&utm_source=feed")))
@@ -3090,7 +3091,7 @@ object Queries {
         byFlag.unionAll(byStatus)
           .select(col("l_returnflag"), col("l_linestatus"),
             col("g_flag"), col("g_status"), col("n"),
-            round(col("qd"), 2).cast("double").as("q"))
+            round(col("qd"), 2).cast(DoubleType).as("q"))
           .orderBy("l_returnflag", "l_linestatus")
       },
       Some("""SELECT COALESCE(l_returnflag, '_') AS l_returnflag,
@@ -3111,7 +3112,7 @@ object Queries {
     QDef("q39_resample_gapfill",
       (s, d) => {
         val e = events(s, d).select(col("event_type"),
-          (floor(unix_timestamp(col("ts")) / 300) * 300).cast("long").as("b"),
+          (floor(unix_timestamp(col("ts")) / 300) * 300).cast(LongType).as("b"),
           col("value"))
         val agg = e.groupBy("event_type", "b")
           .agg(count(lit(1)).as("n"), decSum2(col("value")).as("sum_v"))
@@ -3205,7 +3206,7 @@ object Queries {
     QDef("er_fuzzy_pairs",
       (s, d) => graft.ops.EntityResolution.blockedPairs(part(s, d),
           "p_partkey", "p_name", Seq("p_brand", "p_type"), maxDistance = 3)
-        .select(col("id_a"), col("id_b"), col("distance").cast("long").as("distance"))
+        .select(col("id_a"), col("id_b"), col("distance").cast(LongType).as("distance"))
         .orderBy("id_a", "id_b"),
       Some("""WITH p AS (SELECT p_partkey, p_name, p_brand, p_type FROM part)
         |SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
@@ -3839,7 +3840,7 @@ object Queries {
           .toDF()
           .select(col("media_id"),
             array_join(transform(col("features"),
-              x => x.cast("long").cast("string")), " ").as("block_energy"))
+              x => x.cast(LongType).cast(StringType)), " ").as("block_energy"))
           .orderBy("media_id")
       },
       Some("""WITH sm AS (SELECT doc_id AS media_id,
@@ -3905,7 +3906,7 @@ object Queries {
         val media = Multimodal.syntheticMedia(s, documents(s, d))
         Multimodal.sampleFrames(media, new Multimodal.StubCodec(), everyNth = 2)
           .select(col("media_id"), col("kind"),
-            col("frame_idx").cast("long").as("frame_idx"))
+            col("frame_idx").cast(LongType).as("frame_idx"))
           .orderBy("media_id", "frame_idx")
       },
       Some("""WITH m AS (SELECT doc_id AS media_id,
@@ -3940,9 +3941,9 @@ object Queries {
         Multimodal.sampleFrameLuma(media, new Multimodal.ImageIoCodec(),
             everyNth = 2)
           .select(col("media_id"),
-            col("frame_idx").cast("long").as("frame_idx"),
-            col("n_frames").cast("long").as("n_frames"),
-            col("luma").cast("long").as("luma"))
+            col("frame_idx").cast(LongType).as("frame_idx"),
+            col("n_frames").cast(LongType).as("n_frames"),
+            col("luma").cast(LongType).as("luma"))
           .orderBy("media_id", "frame_idx")
       },
       Some("""WITH m AS (SELECT doc_id AS media_id, text,

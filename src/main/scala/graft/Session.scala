@@ -37,7 +37,8 @@ import org.apache.spark.sql.SparkSession
   *      disk.
   *
   * Both profiles set the session time zone to UTC and switch the UI off;
-  * [[build]] sets the log level to WARN. */
+  * [[build]] sets the log level to WARN and installs graft's planner
+  * strategies ([[plans.Strategies]]). */
 object Session {
 
   def cli(env: Map[String, String] = sys.env): Map[String, String] = Map(
@@ -71,6 +72,7 @@ object Session {
   def build(profile: Map[String, String]): SparkSession = {
     val spark = SparkSession.builder().config(profile).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    plans.Strategies.install(spark)
     spark
   }
 }

@@ -34,8 +34,12 @@ object Tables {
     * are all unchanged. Spark's writers replace or add part files, which
     * moves the table directory's modification time; a file system that
     * reports no time (0) is never memoized. A missing path falls through
-    * to `spark.read.parquet`, so its error is Spark's own. */
+    * to `spark.read.parquet`, so its error is Spark's own.
+    *
+    * Every declared query enters here, so this is also where graft's
+    * planner strategies reach a session ([[plans.Strategies.install]]). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    plans.Strategies.install(spark)
     val path = s"$dir/$name.parquet"
     val p = new Path(path)
     val status =

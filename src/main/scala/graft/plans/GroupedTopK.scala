@@ -138,8 +138,8 @@ case class ExactTopKExec(keys: Seq[Attribute], ordering: Seq[SortOrder], k: Int,
 object GroupedTopK {
 
   /** Top `k` rows per `key` under `sortCols` = (name, ascending), as a
-    * native operator. Registers the strategy on the session (idempotent —
-    * `extraStrategies` is also injected by [[GraftExtensions]]). */
+    * native operator. Installs graft's strategies on the session
+    * ([[Strategies.install]]). */
   def perKey(df: DataFrame, key: String, sortCols: Seq[(String, Boolean)],
       k: Int): DataFrame = perKeys(df, Seq(key), sortCols, k)
 
@@ -147,13 +147,7 @@ object GroupedTopK {
   def perKeys(df: DataFrame, keys: Seq[String], sortCols: Seq[(String, Boolean)],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    // check-then-append on the session-global list must be atomic:
-    // concurrent callers would otherwise double-register the strategy
-    GroupedTopK.synchronized {
-      if (!spark.experimental.extraStrategies.contains(GroupedTopKStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ GroupedTopKStrategy
-    }
+    Strategies.install(spark)
     val plan = df.queryExecution.analyzed
     def attr(n: String): Attribute = plan.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"no column $n"))

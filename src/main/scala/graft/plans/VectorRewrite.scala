@@ -84,11 +84,12 @@ object RewriteVectorFolds extends Rule[LogicalPlan] {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` — injects graft's
-  * optimizer rules and SQL functions into every session of the cluster. */
+  * optimizer rules, planner strategies ([[Strategies.all]]) and SQL
+  * functions into every session of the cluster. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteVectorFolds)
-    e.injectPlannerStrategy(_ => GroupedTopKStrategy)
+    Strategies.all.foreach(s => e.injectPlannerStrategy(_ => s))
     e.injectFunction(
       (org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
         new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),

@@ -4,7 +4,13 @@ package graft.tools
   * `.explain("formatted")` feedback loop as a CLI so plan shape can be
   * inspected under any SF / shuffle-width / conf combination without a
   * REPL, in the session profile Bench times ([[graft.Session.suite]]).
-  * Usage: ExplainQ <sfDir> <name1,name2,...> [mode] */
+  *
+  * Mode `final` first runs each query's own plan to the end, dropping
+  * every row as the `noop` sink Bench writes to does, and then prints
+  * the plan AQE finally ran (`isFinalPlan=true`, formatted). Every other
+  * mode prints the initial plan, made before any stage has run, so it
+  * cannot show what AQE re-plans from the stages' sizes.
+  * Usage: ExplainQ <sfDir> <name1,name2,...> [mode|final] */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -15,7 +21,11 @@ object ExplainQ {
     names.foreach { name =>
       val q = byName.getOrElse(name, sys.error(s"ExplainQ: unknown query '$name'"))
       println(s"==== $name ====")
-      q.fn(spark, sfDir).explain(mode)
+      val df = q.fn(spark, sfDir)
+      if (mode == "final") {
+        df.queryExecution.toRdd.foreach(_ => ())
+        df.explain("formatted")
+      } else df.explain(mode)
     }
     spark.stop()
   }

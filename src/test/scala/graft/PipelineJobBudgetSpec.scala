@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import graft.Model._
 import graft.ops.{Consensus, Publish, RunPipeline}
 import graft.sources.{PozoSource, SheetBackend}
-import scala.jdk.CollectionConverters._
 
 /** The EP1 cycle's Spark job and analysis budget, and the byte encoding of
   * its single-record artifacts. At the paper's size (about nine categories
@@ -127,25 +126,9 @@ class PipelineJobBudgetSpec extends JobCounting {
     val dir = Files.createTempDirectory("graft-parser")
     RunPipeline.run(spark, sources, cfg(dir.toString, "parser-state"))
     assert(Files.exists(dir.resolve("state/last_run.jsonl")))
-    val classLog = dir.resolve("classes.log")
-    val out = dir.resolve("stdout.log")
-    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
-    val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString,
-      "-cp", System.getProperty("java.class.path"), "-Xmx1g",
-      s"-Xlog:class+load:file=$classLog") ++ opens ++ Seq(
-      "graft.Main", "run", "--work-dir", dir.toString,
+    val loaded = ChildJvm.classesLoaded(dir, "graft.Main", "run", "--work-dir", dir.toString,
       "--fixture-dir", "src/test/resources/fixtures/sources")
-    val exit = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(out.toFile).start().waitFor()
-    assert(exit == 0, Files.readString(out))
-    // "[uptime][info][class,load] <class> source: ..."; building the
-    // session state loads some of SqlBaseParser's nested context classes
-    // without parsing anything, so the check is on the parser class itself
-    val loaded = Files.readAllLines(classLog).asScala.map(_.split(" ")(1)).toSet
-    val parser = "org.apache.spark.sql.catalyst.parser.SqlBaseParser"
-    if (!loaded.contains("graft.Main")) fail(s"no class loads logged in $classLog")
-    if (loaded.contains(parser)) fail(s"$parser loaded (see $classLog)")
+    if (loaded.contains(ChildJvm.Parser)) fail(s"${ChildJvm.Parser} loaded (see $dir)")
   }
 
   test("Consensus.merge over a DataFrame runs at most 2 Spark jobs") {

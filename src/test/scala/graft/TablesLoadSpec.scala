@@ -111,8 +111,7 @@ class TablesLoadSpec extends JobCounting {
   }
 
   test("building a sql_sf01 probe query a second time starts no Spark job") {
-    for (name <- Seq("q08_vote_groups", "q13_topk", "q25_sessionize",
-        "q41_topk_perkey", "q54_skew_salted_join")) {
+    for (name <- SqlProbes.names) {
       val q = Queries.all.find(_.name == name).get
       q.fn(spark, d)
       val (_, n) = jobs(s"build-$name")(q.fn(spark, d))
@@ -120,7 +119,31 @@ class TablesLoadSpec extends JobCounting {
     }
   }
 
+  test("a fresh JVM that builds and runs the sql_sf01 probe queries loads no SQL parser") {
+    // the first cold query would otherwise pay the parser's ~1,000 class
+    // loads: a cast by type name (`cast("double")`) parses the name
+    val dir = Files.createTempDirectory("graft-probe-parser")
+    val loaded = ChildJvm.classesLoaded(dir, "graft.SqlProbes", d)
+    if (loaded.contains(ChildJvm.Parser)) fail(s"${ChildJvm.Parser} loaded (see $dir)")
+  }
+
   private def messages(e: Throwable): Seq[String] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(x => String.valueOf(x.getMessage)).toSeq
+}
+
+/** The five queries `perfbench`'s `sql_sf01` workload times. As a main:
+  * builds each over the tables in `args(0)` and runs it into the `noop`
+  * sink, as the benchmark does, in a two-core session of its own. */
+object SqlProbes {
+  val names: Seq[String] = Seq("q08_vote_groups", "q13_topk", "q25_sessionize",
+    "q41_topk_perkey", "q54_skew_salted_join")
+
+  def main(args: Array[String]): Unit = {
+    val spark = Session.build(Session.suite(Map("SPARK_GRAFT_CPUS" -> "2")))
+    for (name <- names)
+      Queries.all.find(_.name == name).get.fn(spark, args(0))
+        .write.format("noop").mode("overwrite").save()
+    spark.stop()
+  }
 }
